@@ -161,80 +161,6 @@ def _run_queries(spark, sf_dir: str) -> dict:
     return timings
 
 
-def _steady_state(
-    spark, sf_dir: str, n_batches: int = 6, seed_rep: int = 20, update_mod: int = 20
-) -> dict:
-    """THE merge-on-read claim, measured: seed a table ~`seed_rep`× larger
-    than each update batch, then apply small update batches whose keys are
-    spread across every bucket — the steady-state CDC shape. CoW must
-    rewrite every affected bucket (≈ the whole table) per batch; MoR
-    appends one delta set sized to the batch. Run via SPARK_GRAFT_STEADY=1."""
-    from pyspark.sql import functions as F
-
-    from kafka_connect_fs_spark.plans.lake import LakeTable
-    from kafka_connect_fs_spark.queries import _transcript_events, t
-
-    base = tempfile.mkdtemp(prefix="kcfs_steady_")
-    try:
-        ev = _transcript_events(t(spark, sf_dir, "events")).select(
-            "conv_id", "turn_idx", "role", "text",
-            F.col("ts").cast("timestamp").alias("ts"), "event_id",
-        )
-        # seed: key space widened seed_rep× (distinct conv_ids per replica)
-        rep = F.explode(F.sequence(F.lit(0), F.lit(seed_rep - 1))).alias("r")
-        seed = ev.select("*", rep).select(
-            F.concat_ws("#", "conv_id", F.col("r").cast("string")).alias("conv_id"),
-            "turn_idx", "role", "text", "ts",
-            F.lit("").alias("_src_file"), F.col("event_id").alias("_src_offset"),
-            "event_id",
-        )
-        out: dict = {}
-        for mode in ("mor", "cow"):
-            tbl = LakeTable.create(
-                spark, os.path.join(base, mode), keys=["conv_id", "turn_idx"],
-                ts_col="ts", n_buckets=32, merge_mode=mode,
-            )
-            t0 = time.monotonic()
-            tbl.merge(seed.drop("event_id"), batch_id="seed")
-            seed_s = round(time.monotonic() - t0, 3)
-            times, touched, rows_written = [], [], []
-            for b in range(n_batches):
-                src = seed.where(
-                    (F.col("event_id") % update_mod == 0)
-                    & F.col("conv_id").endswith("#0")
-                ).select(
-                    "conv_id", "turn_idx", "role",
-                    F.concat_ws(":", "text", F.lit(str(b))).alias("text"),
-                    (F.col("ts") + F.make_interval(secs=F.lit((b + 1) * 1_000_000))).alias("ts"),
-                    "_src_file", "_src_offset",
-                )
-                t0 = time.monotonic()
-                c = tbl.merge(src, batch_id=f"b{b}")
-                times.append(round(time.monotonic() - t0, 3))
-                touched.append(c.metrics["files_added"] + c.metrics["files_removed"])
-                rows_written.append(c.metrics["rows_written"])
-            out[mode] = {
-                "seed_seconds": seed_s,
-                "per_batch_seconds": times,
-                "files_touched_per_batch": touched,
-                "rows_written_per_batch": rows_written,
-                "mean_update_batch_s": round(sum(times) / len(times), 3),
-            }
-        out["seed_events"] = seed.count()
-        # CoW rewrites the full resolved content of every affected bucket,
-        # so its per-batch rows_written IS the resolved table size
-        out["resolved_table_rows"] = out["cow"]["rows_written_per_batch"][0]
-        out["update_batch_rows"] = out["mor"]["rows_written_per_batch"][0]
-        out["write_amp_ratio_cow_over_mor"] = round(
-            sum(out["cow"]["rows_written_per_batch"])
-            / max(1, sum(out["mor"]["rows_written_per_batch"])),
-            1,
-        )
-        return out
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def _scaling(sf_dir: str, multiplier: int = 60) -> dict:
     """Same ingest job at multiple parallelism levels on identical input —
     the north rule's two-cluster-size criterion evidenced in-sandbox.
@@ -373,13 +299,6 @@ def main() -> None:
         result["value"] = round(time.monotonic() - t0, 3)
     finally:
         spark.stop()
-
-    if os.environ.get("SPARK_GRAFT_STEADY") == "1":
-        spark = get_spark("kcfs-steady", cores=cpus, shuffle_partitions=cpus)
-        try:
-            result["steady_state"] = _steady_state(spark, sf_dir)
-        finally:
-            spark.stop()
 
     if os.environ.get("SPARK_GRAFT_SCALING") == "1":
         result["scaling"] = _scaling(sf_dir)

@@ -33,6 +33,12 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
+    """Exact cosine as an interpreted JVM fold over double-cast elements.
+
+    Non-finite embeddings (NaN or inf elements) are unsupported: this
+    fold returns NaN for them, while ``with_cosine``'s Arrow UDF returns
+    NULL, so a threshold filter or a ranking can differ between the two.
+    """
     a, b = _as_double(a), _as_double(b)
     return dot(a, b) / (norm(a) * norm(b))
 
@@ -51,7 +57,14 @@ def _dot_norms_udf():
     Null semantics match the fold: a NULL vector, a NULL element (NaN
     after Arrow transfer) or a length mismatch all yield NULL dot —
     and NULL/x division then yields the same NULL cosine the zip_with
-    null-padding produced."""
+    null-padding produced.
+
+    Non-finite inputs are unsupported: a NaN element arrives as NULL, and
+    a NaN dot or norm (from inf elements) leaves as NULL through Arrow's
+    NaN-to-null conversion, where the JVM fold ``cosine`` gives NaN.
+    Spark treats NaN as larger than every number, so ``cos_sim >= t``
+    keeps a NaN row but drops a NULL one, and a descending rank puts NaN
+    first but NULL last."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -99,7 +112,8 @@ def with_cosine(df: DataFrame, va: str, vb: str, out: str = "cos_sim") -> DataFr
     once through the Arrow-vectorized (dot, norms) UDF with the division
     and round(4) JVM-side (identical values to the interpreted
     zip_with/aggregate fold — pinned by tests — at a fraction of the
-    per-element cost)."""
+    per-element cost). Finite embeddings only: NaN or inf inputs come back
+    NULL here but NaN from the fold (see ``_dot_norms_udf``)."""
     dn = _dot_norms_udf()
     return (
         df.withColumn("_dn", dn(F.col(va), F.col(vb)))

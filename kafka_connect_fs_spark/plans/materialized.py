@@ -94,8 +94,6 @@ class IncrementalRollup:
         n_buckets: int = 16,
         derived: dict[str, Column] | None = None,
     ):
-        if base.merge_mode != "mor":
-            raise ValueError("IncrementalRollup requires a MoR base table")
         if not group_cols or group_cols[0] != base.keys[0]:
             raise ValueError(
                 f"group_cols must start with the base bucket key "
@@ -130,7 +128,7 @@ class IncrementalRollup:
         else:
             self.table = LakeTable.create(
                 base.spark, root, keys=self.group_cols, ts_col=_MV_TS,
-                n_buckets=n_buckets, merge_mode="mor",
+                n_buckets=n_buckets,
             )
 
     # ------------------------------------------------------------ state
@@ -248,157 +246,163 @@ class IncrementalRollup:
             return RefreshStats(last, last, 0, 0, 0, len(live), True)
 
         initial = last < 0
-        if initial:
-            candidates = list(live)
-            touched_keys = None
-        else:
-            # filter by the version encoded in the FILENAME before parsing
-            # anything — a cold tailer against a 10^5-commit log must read
-            # O(window) commit files, not O(log)
-            window = [
-                c
-                for c in (
-                    base._load_commit(n)
-                    for n in base._list_commit_names()
-                    if last < int(n[:20]) <= head
-                )
-                if c.batch_id is not None and c.added
-            ]
-            if not window:
-                # only maintenance / metadata commits in the window: no
-                # logical changes, nothing to absorb (the MV stays pinned
-                # at `last`; read_changes would skip these anyway)
-                return RefreshStats(last, last, 0, 0, 0, len(live), True)
-            changes = base.read_changes(last, head)
-            by_scheme = self._touched_buckets_by_scheme(window, live, changes)
-            default = base._base_n_buckets
-            candidates = [
-                p
-                for p, a in live.items()
-                if a["bucket"] in by_scheme.get(a.get("scheme", default), ())
-            ]
-            # touched BUCKET KEYS, not touched group values: change rows
-            # carry only their NEW column values (and delete tombstones
-            # carry keys alone), so deriving groups from the change feed
-            # would miss the group a row LEFT under an upsert that moved
-            # a payload group column. The bucket key is immutable per row
-            # identity and present on every change row; recomputing every
-            # group the touched keys contribute to — and tombstoning the
-            # groups the MV previously held for them — is correct for
-            # arbitrary group columns (role, time windows, ...).
-            # persist: feeds the semi-join AND the gone-group anti-join
-            bk = self.group_cols[0]
-            touched_keys = changes.select(bk).distinct().persist()
-
-        snap = base._read_files(candidates, renames=renames)
-        agg_exprs = [expr.alias(name) for name, expr in self.aggs.items()]
-        if snap is None:
-            recomputed = None
-        else:
-            snap = base._resolve(snap)
-            if "op" in snap.columns:
-                snap = snap.filter(F.col("op") != F.lit("delete"))
-            if touched_keys is not None:
-                snap = snap.join(
-                    touched_keys, on=[self.group_cols[0]], how="left_semi"
-                )
-            for name, expr in self.derived.items():
-                snap = snap.withColumn(name, expr)
-            recomputed = snap.groupBy(*self.group_cols).agg(*agg_exprs)
-            if touched_keys is not None:
-                # the partial path consumes `recomputed` twice (the gone-
-                # group anti-join/count AND the MV merge write): persist so
-                # the touched-bucket read + resolve + re-aggregation runs
-                # once per refresh, not once per consumer
-                recomputed = recomputed.persist()
-
-        mv_rows = None
-        if recomputed is not None:
-            mv_rows = recomputed.select(
-                F.lit("upsert").alias("op"),
-                *self.group_cols,
-                *self.aggs.keys(),
-                F.lit(head).cast("long").alias(_MV_TS),
-            )
-        n_deleted = 0
-        if touched_keys is not None:
-            # groups the MV previously held for the touched keys but that
-            # no longer exist — a fully-deleted conversation, or rows that
-            # MOVED out of a payload-column group (e.g. a role rewrite, a
-            # turn leaving a time window). The previous groups come from
-            # the MV itself, not the change feed. Null agg columns must
-            # match the upsert side's types or the union rejects the plan.
-            agg_types = {}
-            if recomputed is not None:
-                agg_types = {f.name: f.dataType for f in recomputed.schema.fields}
+        # every frame persisted below is released on EVERY exit path: a
+        # long-running tailer whose MV merge raises (lost commit races,
+        # a failed write) must not keep the cached blocks alive
+        persisted: list[DataFrame] = []
+        try:
+            if initial:
+                candidates = list(live)
+                touched_keys = None
             else:
-                agg_types = {
-                    f.name: f.dataType for f in self.table.read().schema.fields
-                }
-            # the MV shares the base's bucket key (group_cols[0]), so the
-            # touched keys map straight to MV buckets: read only those MV
-            # files (per-file manifest scheme, exactly like read_key) —
-            # at 10^8 groups this turns a full-MV scan per refresh into
-            # O(touched buckets' files)
-            prev = self._read_prev_groups(touched_keys, known=by_scheme)
-            gone = prev.join(
-                touched_keys,
-                on=prev[self.group_cols[0]].eqNullSafe(
-                    touched_keys[self.group_cols[0]]
-                ),
-                how="left_semi",
-            ).select(*self.group_cols)
+                # filter by the version encoded in the FILENAME before parsing
+                # anything — a cold tailer against a 10^5-commit log must read
+                # O(window) commit files, not O(log)
+                window = [
+                    c
+                    for c in (
+                        base._load_commit(n)
+                        for n in base._list_commit_names()
+                        if last < int(n[:20]) <= head
+                    )
+                    if c.batch_id is not None and c.added
+                ]
+                if not window:
+                    # only maintenance / metadata commits in the window: no
+                    # logical changes, nothing to absorb (the MV stays pinned
+                    # at `last`; read_changes would skip these anyway)
+                    return RefreshStats(last, last, 0, 0, 0, len(live), True)
+                changes = base.read_changes(last, head)
+                by_scheme = self._touched_buckets_by_scheme(window, live, changes)
+                default = base._base_n_buckets
+                candidates = [
+                    p
+                    for p, a in live.items()
+                    if a["bucket"] in by_scheme.get(a.get("scheme", default), ())
+                ]
+                # touched BUCKET KEYS, not touched group values: change rows
+                # carry only their NEW column values (and delete tombstones
+                # carry keys alone), so deriving groups from the change feed
+                # would miss the group a row LEFT under an upsert that moved
+                # a payload group column. The bucket key is immutable per row
+                # identity and present on every change row; recomputing every
+                # group the touched keys contribute to — and tombstoning the
+                # groups the MV previously held for them — is correct for
+                # arbitrary group columns (role, time windows, ...).
+                # persist: feeds the semi-join AND the gone-group anti-join
+                bk = self.group_cols[0]
+                touched_keys = changes.select(bk).distinct().persist()
+                persisted.append(touched_keys)
+
+            snap = base._read_files(candidates, renames=renames)
+            agg_exprs = [expr.alias(name) for name, expr in self.aggs.items()]
+            if snap is None:
+                recomputed = None
+            else:
+                snap = base._resolve(snap)
+                if "op" in snap.columns:
+                    snap = snap.filter(F.col("op") != F.lit("delete"))
+                if touched_keys is not None:
+                    snap = snap.join(
+                        touched_keys, on=[self.group_cols[0]], how="left_semi"
+                    )
+                for name, expr in self.derived.items():
+                    snap = snap.withColumn(name, expr)
+                recomputed = snap.groupBy(*self.group_cols).agg(*agg_exprs)
+                if touched_keys is not None:
+                    # the partial path consumes `recomputed` twice (the gone-
+                    # group anti-join/count AND the MV merge write): persist so
+                    # the touched-bucket read + resolve + re-aggregation runs
+                    # once per refresh, not once per consumer
+                    recomputed = recomputed.persist()
+                    persisted.append(recomputed)
+
+            mv_rows = None
             if recomputed is not None:
-                # null-safe equality: a group holding NULL in any group
-                # column (NULL role, to_date of NULL ts) must match its own
-                # recomputed row — plain equality would classify it gone
-                # and emit delete + upsert at the same mv_version (LWW
-                # winner arbitrary → nondeterministically dropped group)
-                rc = recomputed.select(*self.group_cols)
-                gone = gone.join(
-                    rc,
-                    on=[
-                        gone[c].eqNullSafe(rc[c]) for c in self.group_cols
-                    ],
-                    how="left_anti",
-                )
-            # bounded: ⊆ the touched keys' previous groups. Persisted: the
-            # count here and the MV merge below both consume it
-            gone = gone.persist()
-            n_deleted = gone.count()
-            if n_deleted:
-                gone_rows = gone.select(
-                    F.lit("delete").alias("op"),
+                mv_rows = recomputed.select(
+                    F.lit("upsert").alias("op"),
                     *self.group_cols,
-                    *[
-                        F.lit(None).cast(agg_types.get(name, "string")).alias(name)
-                        for name in self.aggs.keys()
-                    ],
+                    *self.aggs.keys(),
                     F.lit(head).cast("long").alias(_MV_TS),
                 )
-                mv_rows = (
-                    gone_rows
-                    if mv_rows is None
-                    else mv_rows.unionByName(gone_rows, allowMissingColumns=False)
-                )
+            n_deleted = 0
+            if touched_keys is not None:
+                # groups the MV previously held for the touched keys but that
+                # no longer exist — a fully-deleted conversation, or rows that
+                # MOVED out of a payload-column group (e.g. a role rewrite, a
+                # turn leaving a time window). The previous groups come from
+                # the MV itself, not the change feed. Null agg columns must
+                # match the upsert side's types or the union rejects the plan.
+                agg_types = {}
+                if recomputed is not None:
+                    agg_types = {f.name: f.dataType for f in recomputed.schema.fields}
+                else:
+                    agg_types = {
+                        f.name: f.dataType for f in self.table.read().schema.fields
+                    }
+                # the MV shares the base's bucket key (group_cols[0]), so the
+                # touched keys map straight to MV buckets: read only those MV
+                # files (per-file manifest scheme, exactly like read_key) —
+                # at 10^8 groups this turns a full-MV scan per refresh into
+                # O(touched buckets' files)
+                prev = self._read_prev_groups(touched_keys, known=by_scheme)
+                gone = prev.join(
+                    touched_keys,
+                    on=prev[self.group_cols[0]].eqNullSafe(
+                        touched_keys[self.group_cols[0]]
+                    ),
+                    how="left_semi",
+                ).select(*self.group_cols)
+                if recomputed is not None:
+                    # null-safe equality: a group holding NULL in any group
+                    # column (NULL role, to_date of NULL ts) must match its own
+                    # recomputed row — plain equality would classify it gone
+                    # and emit delete + upsert at the same mv_version (LWW
+                    # winner arbitrary → nondeterministically dropped group)
+                    rc = recomputed.select(*self.group_cols)
+                    gone = gone.join(
+                        rc,
+                        on=[
+                            gone[c].eqNullSafe(rc[c]) for c in self.group_cols
+                        ],
+                        how="left_anti",
+                    )
+                # bounded: ⊆ the touched keys' previous groups. Persisted: the
+                # count here and the MV merge below both consume it
+                gone = gone.persist()
+                persisted.append(gone)
+                n_deleted = gone.count()
+                if n_deleted:
+                    gone_rows = gone.select(
+                        F.lit("delete").alias("op"),
+                        *self.group_cols,
+                        *[
+                            F.lit(None).cast(agg_types.get(name, "string")).alias(name)
+                            for name in self.aggs.keys()
+                        ],
+                        F.lit(head).cast("long").alias(_MV_TS),
+                    )
+                    mv_rows = (
+                        gone_rows
+                        if mv_rows is None
+                        else mv_rows.unionByName(gone_rows, allowMissingColumns=False)
+                    )
 
-        n_groups = 0
-        if mv_rows is not None:
-            commit = self.table.merge(
-                mv_rows,
-                batch_id=f"mv-{last}-{head}",
-                app_metadata={"mv_base_version": head, "mv_from_version": last},
+            n_groups = 0
+            if mv_rows is not None:
+                commit = self.table.merge(
+                    mv_rows,
+                    batch_id=f"mv-{last}-{head}",
+                    app_metadata={"mv_base_version": head, "mv_from_version": last},
+                )
+                n_groups = int(commit.metrics.get("rows_written", 0)) - n_deleted
+            return RefreshStats(
+                last, head, n_groups, n_deleted, len(candidates), len(live),
+                partial=not initial,
             )
-            n_groups = int(commit.metrics.get("rows_written", 0)) - n_deleted
-        if touched_keys is not None:
-            touched_keys.unpersist()
-            gone.unpersist()
-            if recomputed is not None:
-                recomputed.unpersist()
-        return RefreshStats(
-            last, head, n_groups, n_deleted, len(candidates), len(live),
-            partial=not initial,
-        )
+        finally:
+            for df in persisted:
+                df.unpersist()
 
     def lag(self) -> int:
         """Base commits the MV has not absorbed yet (a freshness metric)."""

@@ -147,6 +147,7 @@ def test_schema_evolution_rename_column(spark, table):
 def test_vacuum_removes_dead_files(spark, table):
     table.merge(edf(spark, [ev("c1", 0, "a", 1)]), "b1")
     table.merge(edf(spark, [ev("c1", 0, "b", 2)]), "b2")
+    table.compact(min_files_per_bucket=2)  # folds both deltas: they go dead
     assert table.vacuum(min_age_seconds=0) >= 1
     assert table.read().collect()[0].text == "b"
 
@@ -163,8 +164,8 @@ def test_delete_tombstone_blocks_older_upsert_resurrection(spark, table):
 
 
 def test_compact_rewrites_buckets(spark, table):
-    # copy-on-write keeps one file per bucket per commit; different convs
-    # land in different buckets across commits
+    # each merge appends one delta file to its conv's bucket; different
+    # convs land in different buckets across commits
     for i in range(6):
         table.merge(edf(spark, [ev(f"c{i}", 0, f"t{i}", i + 1)]), f"b{i}")
     before = {(r.conv_id, r.turn_idx): r.text for r in table.read().collect()}
@@ -243,19 +244,11 @@ def test_xxhash64_parity(spark):
 # ------------------------------------------------------------- merge-on-read
 
 
-@pytest.fixture()
-def mor_table(spark, tmp_path):
-    return LakeTable.create(
-        spark, str(tmp_path / "m"), keys=["conv_id", "turn_idx"], ts_col="ts",
-        n_buckets=4, merge_mode="mor",
-    )
-
-
-def test_mor_merge_never_rewrites_prior_files(spark, mor_table):
+def test_mor_merge_never_rewrites_prior_files(spark, table):
     """The 100x-scale contract: a steady-state batch appends a delta and
     touches NOTHING that exists — write amplification is O(batch), not
-    O(table) (CoW rewrites every affected bucket per batch)."""
-    t = mor_table
+    O(table)."""
+    t = table
     t.merge(edf(spark, [ev(f"c{i}", 0, f"t{i}", 1) for i in range(50)]), "b1")
     before, _, _ = t._state()
     c = t.merge(edf(spark, [ev("c1", 0, "upd", 9), ev("new", 0, "n", 9)]), "b2")
@@ -267,10 +260,10 @@ def test_mor_merge_never_rewrites_prior_files(spark, mor_table):
     assert len(rows) == 51
 
 
-def test_mor_semantics_match_cow(spark, mor_table):
+def test_mor_semantics_match_cow(spark, table):
     """LWW, stale-loses, tombstone-blocks-zombie, replay no-op — the full
     upsert contract, resolved at read time instead of write time."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("c1", 0, "old", 1), ev("c2", 0, "keep", 1)]), "b1")
     t.merge(edf(spark, [ev("c1", 0, "new", 5)]), "b2")
     t.merge(edf(spark, [ev("c1", 0, "stale", 3)]), "b3")  # older ts loses
@@ -285,8 +278,8 @@ def test_mor_semantics_match_cow(spark, mor_table):
     assert t.read_key("c2").count() == 0
 
 
-def test_mor_compact_resolves_deltas(spark, mor_table):
-    t = mor_table
+def test_mor_compact_resolves_deltas(spark, table):
+    t = table
     for i in range(5):
         t.merge(edf(spark, [ev("c1", 0, f"v{i}", i), ev(f"c{i}", 1, "x", i)]), f"b{i}")
     before = {(r.conv_id, r.turn_idx): r.text for r in t.read().collect()}
@@ -299,11 +292,11 @@ def test_mor_compact_resolves_deltas(spark, mor_table):
     assert snap.groupBy("conv_id", "turn_idx").count().where("count > 1").count() == 0
 
 
-def test_incremental_compaction_bounded_and_converges(spark, mor_table):
+def test_incremental_compaction_bounded_and_converges(spark, table):
     """max_buckets bounds one compaction call to the N MOST fragmented
     buckets (bounded maintenance pause); repeated calls converge to the
     fully-folded state with logical content unchanged throughout."""
-    t = mor_table
+    t = table
     # fragment several buckets unevenly: conv c0..c5 across buckets
     for i in range(6):
         t.merge(
@@ -343,12 +336,12 @@ def test_incremental_compaction_bounded_and_converges(spark, mor_table):
         t.compact(min_files_per_bucket=1, max_buckets=-1)
 
 
-def test_compaction_retries_after_losing_commit_race(spark, mor_table):
+def test_compaction_retries_after_losing_commit_race(spark, table):
     """A separate maintenance process compacting alongside a live ingest
     loop loses the version race to an ingest commit: compact must re-read
     the head and re-attempt (its parquet output is version-independent),
     not raise — and the concurrent batch's rows must survive."""
-    t = mor_table
+    t = table
     for i in range(3):
         t.merge(edf(spark, [ev("c1", 0, f"v{i}", i)]), f"b{i}")
 
@@ -373,15 +366,14 @@ def test_compaction_retries_after_losing_commit_race(spark, mor_table):
     assert got[("c1", 0)] == "v2" and got[("c9", 9)] == "concurrent"
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_merge_race_same_batch_id_commits_once(spark, tmp_path, mode):
+def test_merge_race_same_batch_id_commits_once(spark, tmp_path):
     """Split-brain daemons replaying the SAME batch (operator restarts the
     ingest job while the old process is mid-MERGE): the loser of the commit
     race must return the winner's existing commit, not log batch_id twice —
     the exactly-once-per-batch_id replay guard holds under dual writers."""
     t = LakeTable.create(
         spark, str(tmp_path / "sb"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode=mode,
+        ts_col="ts", n_buckets=4,
     )
     t.merge(edf(spark, [ev("c1", 0, "base", 1)]), "b0")
 
@@ -410,8 +402,8 @@ def test_merge_race_same_batch_id_commits_once(spark, tmp_path, mode):
     assert got == {("c1", 0): "base", ("c1", 1): "winner"}
 
 
-def test_mor_expire_tombstones_does_not_resurrect(spark, mor_table):
-    t = mor_table
+def test_mor_expire_tombstones_does_not_resurrect(spark, table):
+    t = table
     t.merge(edf(spark, [ev("c1", 0, "body", 1)]), "b1")
     t.merge(edf(spark, [ev("c1", 0, "", 10, op="delete")]), "b2")
     c = t.expire_tombstones(ts(100))
@@ -420,10 +412,10 @@ def test_mor_expire_tombstones_does_not_resurrect(spark, mor_table):
     assert t.snapshot().where("conv_id = 'c1'").count() == 0
 
 
-def test_mor_schema_union_survives_narrow_batches(spark, mor_table):
+def test_mor_schema_union_survives_narrow_batches(spark, table):
     """A delta batch MISSING an optional column must not shrink the table
     schema, and reads fill the gap with nulls (mergeSchema)."""
-    t = mor_table
+    t = table
     wide = edf(spark, [ev("c1", 0, "a", 1)]).withColumn("quality", F.lit(0.9))
     t.merge(wide, "b1")
     t.merge(edf(spark, [ev("c2", 0, "b", 2)]), "b2")  # narrow batch
@@ -502,7 +494,7 @@ def test_losing_writer_cannot_clobber_committed_data(spark, tmp_path, monkeypatc
 
     root = str(tmp_path / "race")
     t1 = LakeTable.create(spark, root, keys=["conv_id", "turn_idx"], ts_col="ts",
-                          n_buckets=4, merge_mode="mor")
+                          n_buckets=4)
     t1.merge(edf(spark, [ev("c1", 0, "winner", 1)]), "b1")
 
     t2 = LakeTable(spark, root)
@@ -523,10 +515,10 @@ def test_losing_writer_cannot_clobber_committed_data(spark, tmp_path, monkeypatc
 # --------------------------------------------------------- time-range reads
 
 
-def test_read_range_prunes_files_by_ts_stats(spark, mor_table):
+def test_read_range_prunes_files_by_ts_stats(spark, table):
     """Per-file [ts_min, ts_max] footer stats recorded at commit time let
     a time-window read skip files entirely (manifest-stat pruning)."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("c1", 0, "day0", 0), ev("c2", 0, "day0", 10)]), "b1")
     t.merge(edf(spark, [ev("c3", 0, "day1", 86400), ev("c4", 0, "day1", 86410)]), "b2")
     live, _, _ = t._state()
@@ -580,7 +572,7 @@ def test_mor_write_salt_spreads_hot_bucket(spark, tmp_path):
     through several tasks/files instead of serializing into one; content
     identical either way."""
     t1 = LakeTable.create(spark, str(tmp_path / "s1"), keys=["conv_id", "turn_idx"],
-                          ts_col="ts", n_buckets=4, merge_mode="mor")
+                          ts_col="ts", n_buckets=4)
     rows = [ev("hot", 0, f"v{i}", i) for i in range(400)] + [ev("c2", 0, "x", 1)]
     # at toy scale AQE would re-coalesce the salted partitions (they are
     # kilobytes); at real scale a hot bucket exceeds the advisory partition
@@ -611,7 +603,7 @@ def test_type_widening_evolution_int_to_long(spark, tmp_path):
     AND after coexist and read back upcast (Spark 4 parquet read-side
     widening behind the promoted footer schema)."""
     t = LakeTable.create(spark, str(tmp_path / "w"), keys=["conv_id", "turn_idx"],
-                         ts_col="ts", n_buckets=4, merge_mode="mor")
+                         ts_col="ts", n_buckets=4)
     S_INT = "conv_id string, turn_idx int, score int, ts timestamp"
     S_LONG = "conv_id string, turn_idx int, score long, ts timestamp"
     t.merge(spark.createDataFrame([("c1", 0, 7, ts(1))], S_INT), "b1")
@@ -624,7 +616,7 @@ def test_type_widening_evolution_int_to_long(spark, tmp_path):
     assert dict(t.read().dtypes)["score"] == "bigint"
     # float -> double widening through the same path
     t2 = LakeTable.create(spark, str(tmp_path / "w2"), keys=["conv_id", "turn_idx"],
-                          ts_col="ts", n_buckets=4, merge_mode="mor")
+                          ts_col="ts", n_buckets=4)
     t2.merge(spark.createDataFrame([("c1", 0, 1.5, ts(1))],
                                    "conv_id string, turn_idx int, v float, ts timestamp"), "b1")
     t2.merge(spark.createDataFrame([("c2", 0, 2.5, ts(2))],
@@ -633,10 +625,10 @@ def test_type_widening_evolution_int_to_long(spark, tmp_path):
     assert {r.conv_id: r.v for r in t2.read().collect()} == {"c1": 1.5, "c2": 2.5}
 
 
-def test_read_key_prunes_files_by_key_stats(spark, mor_table):
+def test_read_key_prunes_files_by_key_stats(spark, table):
     """After key-clustered compaction, per-file [key_min, key_max] stats
     let a point lookup skip sibling files in its own bucket."""
-    t = mor_table
+    t = table
     # many keys, several merges → several files per bucket
     for b in range(3):
         t.merge(edf(spark, [ev(f"c{i:03d}", 0, f"{b}:{i}", b * 100 + i)
@@ -662,6 +654,8 @@ def test_read_key_prunes_files_by_key_stats(spark, mor_table):
 
 def test_vacuum_retention_preserves_time_travel(spark, table):
     c1 = table.merge(edf(spark, [ev("c1", 0, "v1", 1)]), "b1")
+    # compaction replaces v1's delta: only version c1 still references it
+    table.compact(min_files_per_bucket=1)
     c2 = table.merge(edf(spark, [ev("c1", 0, "v2", 2)]), "b2")
     c3 = table.merge(edf(spark, [ev("c1", 0, "v3", 3)]), "b3")
     # keep the last 2 versions' files: v2 and v3 readable, v1's file gone
@@ -671,15 +665,16 @@ def test_vacuum_retention_preserves_time_travel(spark, table):
     with pytest.raises(Exception):
         table.read(at_version=c1.version).collect()
     # full vacuum keeps only the latest
-    table.vacuum(min_age_seconds=0)
+    table.compact(min_files_per_bucket=1)
+    assert table.vacuum(min_age_seconds=0) >= 1
     assert table.read().collect()[0].text == "v3"
 
 
-def test_read_changes_serves_exact_change_batches(spark, mor_table):
+def test_read_changes_serves_exact_change_batches(spark, table):
     """CDF: changes between two versions come back exactly — upserts AND
     delete events with their op — without snapshot diffing; compaction
     commits add no phantom changes."""
-    t = mor_table
+    t = table
     c1 = t.merge(edf(spark, [ev("c1", 0, "a", 1), ev("c2", 0, "b", 1)]), "b1")
     c2 = t.merge(edf(spark, [ev("c1", 0, "a2", 2)]), "b2")
     c3 = t.merge(edf(spark, [ev("c2", 0, "", 3, op="delete")]), "b3")
@@ -708,9 +703,9 @@ def test_downstream_pipeline_tails_the_lake_via_cdf(spark, tmp_path):
     of batches, B's final state equals A's — the lake is itself a tailable
     CDC source for downstream consumers."""
     a = LakeTable.create(spark, str(tmp_path / "a"), keys=["conv_id", "turn_idx"],
-                         ts_col="ts", n_buckets=4, merge_mode="mor")
+                         ts_col="ts", n_buckets=4)
     b = LakeTable.create(spark, str(tmp_path / "b"), keys=["conv_id", "turn_idx"],
-                         ts_col="ts", n_buckets=4, merge_mode="mor")
+                         ts_col="ts", n_buckets=4)
     cursor = -1
     for i in range(3):
         batch = [ev(f"c{j}", 0, f"g{i}:{j}", i * 10 + j) for j in range(4)]
@@ -727,8 +722,8 @@ def test_downstream_pipeline_tails_the_lake_via_cdf(spark, tmp_path):
     assert state_a == state_b and ("c0", 0) not in state_a
 
 
-def test_read_range_both_bounds(spark, mor_table):
-    t = mor_table
+def test_read_range_both_bounds(spark, table):
+    t = table
     t.merge(edf(spark, [ev("c1", 0, "early", 10), ev("c2", 0, "mid", 500),
                         ev("c3", 0, "late", 2000)]), "b1")
     rows = {r.conv_id for r in t.read_range(ts_from=ts(100), ts_to=ts(1000)).collect()}
@@ -738,10 +733,10 @@ def test_read_range_both_bounds(spark, mor_table):
     assert rows2 == {"c2"}
 
 
-def test_files_in_range_incomparable_stats_never_prune(spark, mor_table):
+def test_files_in_range_incomparable_stats_never_prune(spark, table):
     """Numeric / mistyped bounds must degrade to reading the file (like
     read_key's _covers), never crash or silently prune."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("c1", 0, "a", 0), ev("c2", 0, "b", 86400)]), "b1")
     live, _, _ = t._state()
     # int-epoch bounds are incomparable with the stored isoformat strings:
@@ -750,10 +745,10 @@ def test_files_in_range_incomparable_stats_never_prune(spark, mor_table):
     assert t.files_in_range(ts_from=0) == sorted(live)
 
 
-def test_read_changes_commit_version_long_on_both_paths(spark, mor_table):
+def test_read_changes_commit_version_long_on_both_paths(spark, table):
     """The empty and non-empty read_changes paths must agree on
     _commit_version's type (long) so unions across calls don't clash."""
-    t = mor_table
+    t = table
     c1 = t.merge(edf(spark, [ev("c1", 0, "a", 1)]), "b1")
     nonempty = t.read_changes(-1)
     empty = t.read_changes(c1.version)
@@ -765,13 +760,134 @@ def test_read_changes_commit_version_long_on_both_paths(spark, mor_table):
 
 
 
+def _write_cow_commit(spark, t, rows, batch_id):
+    """Commit ``rows`` the way the retired copy-on-write merge did: every
+    bucket the batch touches is rewritten LWW-resolved (tombstones kept)
+    into one file set, and the bucket's previous files are removed."""
+    import os
+
+    from kafka_connect_fs_spark.plans.lake import Commit
+
+    src = edf(spark, rows).withColumn("_bucket", t._bucket_expr("conv_id"))
+    affected = {r[0] for r in src.select("_bucket").distinct().collect()}
+    live, schema_json, _ = t._state()
+    old = sorted(p for p, a in live.items() if a["bucket"] in affected)
+    merged = src
+    if old:
+        merged = t._read_files(old).unionByName(src, allowMissingColumns=True)
+    resolved = lww_dedup(merged, t.keys, t.ts_col).withColumn(
+        "_bucket", t._bucket_expr("conv_id")
+    )
+    version = t.latest_version() + 1
+    rel = f"c{version:020d}-legacy"
+    resolved.withColumn("_pb", F.col("_bucket")).write.partitionBy("_pb").parquet(
+        os.path.join(t.root, "data", rel)
+    )
+    t._write_commit(
+        Commit(
+            version=version, batch_id=batch_id,
+            added=t._scan_written(os.path.join(t.root, "data", rel), rel),
+            removed=old,
+            schema_json=t._union_schema_json(
+                schema_json, resolved.drop("_bucket").schema
+            ),
+        )
+    )
+    return version
+
+
+def test_legacy_cow_table_stays_exact_and_its_rewrites_reject_the_feed(
+    spark, tmp_path
+):
+    """A table written by the retired copy-on-write merge: ``_table.json``
+    still says ``merge_mode: cow`` and its merge commits remove the
+    buckets they rewrite. Reads, point lookups, further merges and
+    compaction stay exact against the LWW oracle; the change feed (and
+    an MV refresh, which reads through it) refuses the rewrite commit,
+    whose files are whole buckets rather than the batch's changes."""
+    import json
+    import os
+
+    from kafka_connect_fs_spark.plans.materialized import IncrementalRollup
+
+    root = str(tmp_path / "legacy")
+    os.makedirs(os.path.join(root, "_log"))
+    os.makedirs(os.path.join(root, "data"))
+    with open(os.path.join(root, "_table.json"), "w") as f:
+        json.dump(
+            {"keys": ["conv_id", "turn_idx"], "ts_col": "ts", "n_buckets": 4,
+             "merge_mode": "cow"},
+            f,
+        )
+    t = LakeTable(spark, root)
+    history = []
+
+    def apply(rows):
+        history.extend(rows)
+
+    def oracle():
+        latest = {}
+        for r in history:
+            k = (r.conv_id, r.turn_idx)
+            if k not in latest or r.ts > latest[k].ts:
+                latest[k] = r
+        return {k: r.text for k, r in latest.items() if r.op != "delete"}
+
+    b0 = [ev(f"c{i}", j, f"v0-{i}-{j}", 10 + i) for i in range(8) for j in range(2)]
+    apply(b0)
+    _write_cow_commit(spark, t, b0, "b0")
+    mv = IncrementalRollup(
+        t, str(tmp_path / "mv"), ["conv_id"], {"n": F.count(F.lit(1))},
+        n_buckets=4,
+    )
+    mv.refresh()  # initial build: a full read, no change feed
+
+    b1 = [
+        ev("c1", 0, "v1-new", 50),
+        ev("c2", 1, "v1-stale", 1),  # older ts: loses LWW
+        ev("c3", 0, "", 60, op="delete"),
+        ev("c9", 0, "v1-born", 50),
+    ]
+    apply(b1)
+    v1 = _write_cow_commit(spark, t, b1, "b1")
+    cow_commit = t.get_commit_by_batch_id("b1")
+    assert cow_commit.removed  # a CoW-shaped rewrite
+    assert _final(t) == oracle()
+    for k in ("c1", "c2", "c3", "c9"):
+        want = {txt for (c, _), txt in oracle().items() if c == k}
+        assert {r.text for r in t.read_key(k).collect()} == want, k
+
+    b2 = [
+        ev("c3", 0, "v2-zombie", 30),  # older than the tombstone
+        ev("c1", 0, "v2-newer", 70),
+        ev("c4", 1, "", 80, op="delete"),
+    ]
+    apply(b2)
+    c2 = t.merge(edf(spark, b2), "b2")
+    assert _final(t) == oracle()
+    assert t.compact(min_files_per_bucket=1) is not None
+    assert _final(t) == oracle()
+    snap = t.snapshot()
+    assert snap.groupBy("conv_id", "turn_idx").count().where("count > 1").count() == 0
+
+    # the feed serves the merge-on-read commit after the rewrite ...
+    got = {(r.conv_id, r.turn_idx, r.text) for r in t.read_changes(v1).collect()}
+    assert got == {(r.conv_id, r.turn_idx, r.text) for r in b2}
+    assert c2.version > v1
+    # ... but refuses any window that contains the rewrite
+    with pytest.raises(ValueError, match="copy-on-write"):
+        t.read_changes(v1 - 1)
+    with pytest.raises(ValueError, match="copy-on-write"):
+        mv.refresh()
+
+
 def test_read_changes_empty_poll_mirrors_current_schema(spark, tmp_path):
     """After additive schema evolution, an EMPTY read_changes poll must
     mirror the CURRENT schema (newest live file), not the oldest commit's
     — otherwise a consumer unioning consecutive polls hits a clash."""
     t = LakeTable.create(
         spark, str(tmp_path / "cdf_evo"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=2, merge_mode="mor",
+        ts_col="ts", n_buckets=2,
     )
     t.merge(edf(spark, [ev("c1", 0, "a", 1)]), batch_id="b1")
     evolved = edf(spark, [ev("c2", 0, "b", 2)]).withColumn("extra", F.lit("x"))
@@ -787,7 +903,7 @@ def test_read_changes_empty_poll_mirrors_current_schema(spark, tmp_path):
 
 
 def test_concurrent_commit_stale_snapshot_raises_not_overwrites(spark, tmp_path):
-    """CoW optimistic concurrency: a writer merging against a STALE state
+    """Optimistic concurrency: a writer merging against a STALE state
     snapshot must surface ConcurrentCommitError (put-if-absent on the
     version derived from ITS snapshot), never silently overwrite the
     interleaved commit."""
@@ -829,6 +945,7 @@ def test_read_key_int_typed_first_key(spark, tmp_path):
 def test_vacuum_min_age_guards_in_flight_writers(spark, table):
     table.merge(edf(spark, [ev("c1", 0, "a", 1)]), "b1")
     table.merge(edf(spark, [ev("c1", 0, "b", 2)]), "b2")
+    table.compact(min_files_per_bucket=2)
     # default age guard: freshly-written unreferenced files (an in-flight
     # writer's pre-commit output looks exactly like this) survive
     assert table.vacuum() == 0
@@ -850,29 +967,6 @@ def test_partial_checkpoint_falls_back_to_replay(spark, tmp_path):
         _json.dump({"version": v, "live": {}}, f)  # missing fields
     t2 = LakeTable(spark, str(tmp_path / "ck"))
     assert t2.read().collect()[0].text == "x"
-
-
-def test_cow_schema_union_keeps_unaffected_bucket_columns(spark, tmp_path):
-    """A CoW merge touching only bucket B must not drop from the tracked
-    schema a column that lives solely in bucket A's files."""
-    t = LakeTable.create(spark, str(tmp_path / "cowschema"),
-                         keys=["conv_id", "turn_idx"], ts_col="ts", n_buckets=8)
-    with_extra = edf(spark, [ev("c1", 0, "a", 1)]).withColumn("extra", F.lit("x"))
-    t.merge(with_extra, "b1")
-    # find a conv that buckets differently from c1, then merge WITHOUT extra
-    for i in range(2, 30):
-        other = edf(spark, [ev(f"c{i}", 0, "b", 2)])
-        b1 = t._bucket_expr("conv_id")
-        a = with_extra.select(b1).first()[0]
-        b = other.select(t._bucket_expr("conv_id")).first()[0]
-        if a != b:
-            t.merge(other, f"b{i}")
-            break
-    else:
-        pytest.skip("no differing bucket found")
-    assert "extra" in t.current_schema().fieldNames()
-    got = {r.conv_id: r for r in t.read().collect()}
-    assert got["c1"].extra == "x"
 
 
 def test_time_travel_does_not_apply_later_renames(spark, table):
@@ -900,15 +994,6 @@ def test_promote_rejects_lossy_bigint_to_double(spark):
         _promote(T.LongType(), T.DoubleType())
     with pytest.raises(ValueError):
         _promote(T.FloatType(), T.LongType())
-
-
-def test_cow_write_salt_accepted(spark, tmp_path):
-    t = LakeTable.create(spark, str(tmp_path / "cowsalt"),
-                         keys=["conv_id", "turn_idx"], ts_col="ts", n_buckets=2)
-    rows = [ev("hot", i % 3, f"v{i}", i) for i in range(60)]
-    t.merge(edf(spark, rows), "b1", write_salt=4)
-    got = {(r.conv_id, r.turn_idx): r.text for r in t.read().collect()}
-    assert got == {("hot", k): f"v{57 + k}" for k in range(3)}
 
 
 def test_xxhash64_bucket_property_driver_equals_spark(spark):
@@ -962,7 +1047,7 @@ def test_read_key_property_random_keys_found(spark, tmp_path):
     keys = list({f"c{rng.randrange(10**9)}-{i}" for i in range(60)})
     t = LakeTable.create(
         spark, str(tmp_path / "pk"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=8, merge_mode="mor",
+        ts_col="ts", n_buckets=8,
     )
     df = spark.createDataFrame(
         [(k, i % 3, f"txt-{k}", float(i)) for i, k in enumerate(keys)],
@@ -982,7 +1067,7 @@ def test_mor_merge_retries_through_concurrent_commit(spark, tmp_path):
     independent), not fail the batch."""
     root = str(tmp_path / "race_mor")
     t = LakeTable.create(spark, root, keys=["conv_id", "turn_idx"],
-                         ts_col="ts", n_buckets=4, merge_mode="mor")
+                         ts_col="ts", n_buckets=4)
     df_a = spark.createDataFrame(
         [(f"c{i}", 0, f"a{i}", 1.0) for i in range(8)],
         "conv_id string, turn_idx int, text string, ts double")
@@ -1005,41 +1090,6 @@ def test_mor_merge_retries_through_concurrent_commit(spark, tmp_path):
     assert versions == sorted(set(versions))  # no clobbered versions
 
 
-def test_cow_merge_restarts_when_inputs_compacted_away(spark, tmp_path):
-    """CoW race where the concurrent commit was a COMPACTION of the same
-    buckets: the rewrite's inputs are no longer live, so the merge must
-    recompute from a fresh snapshot (not resurrect replaced files)."""
-    root = str(tmp_path / "race_cow")
-    t = LakeTable.create(spark, root, keys=["conv_id", "turn_idx"],
-                         ts_col="ts", n_buckets=4, merge_mode="mor")
-    seed = spark.createDataFrame(
-        [(f"c{i}", 0, f"old{i}", 1.0) for i in range(12)],
-        "conv_id string, turn_idx int, text string, ts double")
-    t.merge(seed, batch_id="seed1")
-    t.merge(seed.withColumn("ts", F.lit(2.0)), batch_id="seed2")
-
-    cow = LakeTable(spark, root)
-    cow.merge_mode = "cow"
-    other = LakeTable(spark, root)
-    fired = []
-
-    def compact_under_us():
-        if not fired:
-            fired.append(1)
-            assert other.compact(min_files_per_bucket=2) is not None
-
-    upd = spark.createDataFrame(
-        [(f"c{i}", 0, f"new{i}", 9.0) for i in range(12)], seed.schema)
-    c = cow.merge(upd, batch_id="cow1", precommit_check=compact_under_us)
-    assert c is not None
-    got = {r.conv_id: r.text for r in t.read().collect()}
-    assert got == {f"c{i}": f"new{i}" for i in range(12)}
-    # the replaced (compacted-away) files must not have been resurrected
-    live, _, _ = t._state()
-    removed = {p for h in t.history() for p in h["removed"]}
-    assert not (set(live) & removed)
-
-
 # ------------------------------------------------------ bucket-spec evolution
 
 
@@ -1058,7 +1108,7 @@ def test_set_n_buckets_is_metadata_only_and_reads_stay_exact(spark, tmp_path):
     lookups remain exact across both eras."""
     t = LakeTable.create(
         spark, str(tmp_path / "ev"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     t.merge(edf(spark, [ev(f"c{i}", 0, f"old{i}", i) for i in range(8)]), "b0")
     c = t.set_n_buckets(9)
@@ -1087,7 +1137,7 @@ def test_set_n_buckets_is_metadata_only_and_reads_stay_exact(spark, tmp_path):
 def test_compact_migrates_old_scheme_files(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "mig"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     t.merge(edf(spark, [ev(f"c{i}", 0, f"v{i}", i) for i in range(10)]), "b0")
     t.set_n_buckets(7)
@@ -1104,31 +1154,10 @@ def test_compact_migrates_old_scheme_files(spark, tmp_path):
     assert t.compact(min_files_per_bucket=99) is None
 
 
-def test_cow_merge_rewrites_old_scheme_files_of_affected_keys(spark, tmp_path):
-    """CoW reads are resolve-free, so a merge after set_n_buckets must
-    find and rewrite the OLD-scheme file holding the key's prior version
-    (bucketed differently under the old scheme) — otherwise the stale
-    version would stay visible."""
-    t = LakeTable.create(
-        spark, str(tmp_path / "cowev"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="cow",
-    )
-    t.merge(edf(spark, [ev("k1", 0, "v1", 1), ev("k2", 0, "x", 1)]), "b0")
-    t.set_n_buckets(8)
-    t.merge(edf(spark, [ev("k1", 0, "v2", 2)]), "b1")
-    rows = t.read().collect()
-    assert {(r.conv_id, r.turn_idx): r.text for r in rows} == {
-        ("k1", 0): "v2", ("k2", 0): "x",
-    }
-    assert len(rows) == 2  # no stale duplicate of k1 anywhere
-    assert {r.text for r in t.read_key("k1").collect()} == {"v2"}
-    assert {r.text for r in t.read_key("k2").collect()} == {"x"}
-
-
 def test_set_n_buckets_survives_checkpoint_and_reopen(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "ck"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     t._ckpt_every = 2
     t.merge(edf(spark, [ev("a", 0, "1", 1)]), "b0")
@@ -1144,7 +1173,7 @@ def test_set_n_buckets_survives_checkpoint_and_reopen(spark, tmp_path):
 def test_expire_tombstones_across_schemes(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "exp"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     t.merge(
         edf(
@@ -1179,7 +1208,7 @@ def test_expire_tombstones_cross_scheme_versions_of_one_key(spark, tmp_path):
     assert h % 8 != h % 13  # the scenario requires differing bucket ids
     t = LakeTable.create(
         spark, str(tmp_path / "xs"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=8, merge_mode="mor",
+        ts_col="ts", n_buckets=8,
     )
     t.merge(edf(spark, [ev("gone", 0, "v1", 1)]), "b0")
     t.merge(edf(spark, [ev("gone", 0, None, 20, op="delete")]), "b1")
@@ -1208,13 +1237,13 @@ def test_set_n_buckets_validates(spark, tmp_path):
         t.set_n_buckets(-3)
 
 
-def test_read_columns_prunes_scan_below_lww_resolve(spark, mor_table):
+def test_read_columns_prunes_scan_below_lww_resolve(spark, table):
     """read(columns=["text"]) must push column pruning into the parquet
     ReadSchema even though the MoR LWW aggregate packs rows into a
     struct: `role` and `tool` (unrequested payload) may not be scanned,
     while keys/ts/lineage stay internal to keep the resolve
     deterministic — and the result equals the unpruned read."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("a", 0, "v1", 1), ev("a", 0, "v2", 2),
                         ev("b", 1, "x", 3)]), "b1")
     t.merge(edf(spark, [ev("b", 1, "y", 4)]), "b2")
@@ -1236,11 +1265,11 @@ def test_read_columns_prunes_scan_below_lww_resolve(spark, mor_table):
         t.read(columns=["nope"])
 
 
-def test_delete_where_tombstones_matching_current_rows(spark, mor_table):
+def test_delete_where_tombstones_matching_current_rows(spark, table):
     """Predicate delete erases exactly the keys whose CURRENT winning row
     matches — including rows whose older versions didn't match — and a
     genuinely later upsert still supersedes the tombstone."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [
         ev("a", 0, "keep", 1),
         ev("b", 0, "purge-me", 2),
@@ -1265,18 +1294,18 @@ def test_delete_where_tombstones_matching_current_rows(spark, mor_table):
     assert got[("b", 0)] == "reborn"
 
 
-def test_delete_where_sql_string_and_column_hint(spark, mor_table):
+def test_delete_where_sql_string_and_column_hint(spark, table):
     """SQL-string predicates work, and needed_columns prunes the matching
     scan's ReadSchema to predicate + key/ts columns."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("a", 0, "x", 1), ev("b", 0, "yy", 2)]), "b1")
     t.delete_where("length(text) > 1", needed_columns=["text"])
     assert {r.conv_id for r in t.read().collect()} == {"a"}
 
 
-def test_read_range_columns_pruned(spark, mor_table):
+def test_read_range_columns_pruned(spark, table):
     """read_range(columns=...) prunes the scan like read(columns=...)."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("a", 0, "early", 1), ev("b", 0, "late", 50)]), "b1")
     df = t.read_range(ts_from=ts(10), columns=["text"])
     assert df.columns == ["text"]
@@ -1292,17 +1321,17 @@ def test_read_columns_and_delete_where_on_never_written_table(spark, tmp_path):
     retention cron against a new table must not crash."""
     t = LakeTable.create(
         spark, str(tmp_path / "fresh"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     df = t.read(columns=["conv_id"])
     assert df.columns == ["conv_id"] and df.count() == 0
     assert t.delete_where("conv_id = 'x'", needed_columns=["conv_id"]) is None
 
 
-def test_read_range_empty_window_keeps_projection_contract(spark, mor_table):
+def test_read_range_empty_window_keeps_projection_contract(spark, table):
     """A window pruned to zero files must still return the projected
     schema (callers union per-window pages) and still validate columns."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("a", 0, "x", 1)]), "b1")
     empty = t.read_range(ts_from=ts(10**6), ts_to=ts(10**6 + 1),
                          columns=["conv_id", "text"])
@@ -1311,12 +1340,12 @@ def test_read_range_empty_window_keeps_projection_contract(spark, mor_table):
         t.read_range(ts_from=ts(10**6), ts_to=ts(10**6 + 1), columns=["nope"])
 
 
-def test_delete_where_derives_needed_columns(spark, mor_table):
+def test_delete_where_derives_needed_columns(spark, table):
     """Without needed_columns, the predicate's referenced columns are
     derived from the expression tree: the match scan's parquet ReadSchema
     must carry only role + keys + ts — never text/tool (the retention
     cron gets the pruned scan by default, VERDICT r5 item 7)."""
-    t = mor_table
+    t = table
     t.merge(edf(spark, [ev("a", 0, "x", 1), ev("b", 0, "y", 2)]), "b1")
     assert sorted(t._referenced_columns(F.col("role") == "user")) == ["role"]
     tomb = t._delete_tombstones(F.col("role") == "user")
@@ -1339,7 +1368,7 @@ def test_delete_where_rejects_float_ts(spark, tmp_path):
     it must win — refuse loudly instead of silently failing deletes."""
     t = LakeTable.create(
         spark, str(tmp_path / "fl"), keys=["k"], ts_col="ts",
-        n_buckets=2, merge_mode="mor",
+        n_buckets=2,
     )
     t.merge(
         spark.createDataFrame([("a", 2.0, "v")],
@@ -1355,7 +1384,7 @@ def test_delete_where_rejects_string_ts(spark, tmp_path):
     ts that silently LOSES LWW) — delete_where must refuse loudly."""
     t = LakeTable.create(
         spark, str(tmp_path / "s"), keys=["k"], ts_col="ts",
-        n_buckets=2, merge_mode="mor",
+        n_buckets=2,
     )
     t.merge(
         spark.createDataFrame([("a", "2024-01-01T00:00:00", "v")],

@@ -27,7 +27,7 @@ AGGS = lambda: {  # noqa: E731 - fresh Columns per test
 def base(spark, tmp_path):
     return LakeTable.create(
         spark, str(tmp_path / "base"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
 
 
@@ -253,7 +253,7 @@ def test_property_any_change_sequence_matches_full_recompute(
         tmp = tmp_path_factory.mktemp("mvprop")
         base_t = LakeTable.create(
             spark, str(tmp / "base"), keys=["conv_id", "turn_idx"],
-            ts_col="ts", n_buckets=2, merge_mode="mor",
+            ts_col="ts", n_buckets=2,
         )
         mv = IncrementalRollup(
             base_t, str(tmp / "mv"), group_cols=["conv_id"], aggs=AGGS(),
@@ -281,13 +281,26 @@ def test_property_any_change_sequence_matches_full_recompute(
     prop()
 
 
-def test_requires_mor_base(spark, tmp_path):
-    cow = LakeTable.create(
-        spark, str(tmp_path / "cow"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="cow",
+def test_refresh_releases_persisted_frames_when_merge_fails(
+    spark, base, tmp_path, monkeypatch
+):
+    """A long-running tailer whose MV merge raises (lost commit races, a
+    failed write) must not keep the refresh's persisted frames cached."""
+    seed(spark, base)
+    mv = mv_of(base, tmp_path)
+    mv.refresh()
+    base.merge(
+        edf(spark, [ev("c1", 0, "changed", 999), ev("c9", 0, "new", 999)]), "b2"
     )
-    with pytest.raises(ValueError, match="MoR"):
-        IncrementalRollup(cow, str(tmp_path / "mv"), ["conv_id"], AGGS())
+    spark.catalog.clearCache()  # drop frames other tests left cached
+
+    def failing_merge(*args, **kwargs):
+        raise RuntimeError("MV merge failed")
+
+    monkeypatch.setattr(mv.table, "merge", failing_merge)
+    with pytest.raises(RuntimeError, match="MV merge failed"):
+        mv.refresh()
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
 
 
 def test_payload_group_column_tracks_rows_moving_between_groups(
@@ -341,7 +354,7 @@ def test_reopen_with_mismatched_group_cols_rejected(spark, tmp_path):
     --mv root must fail loudly, not merge differently-keyed rows."""
     base_t = LakeTable.create(
         spark, str(tmp_path / "b2"), keys=["conv_id", "turn_idx"],
-        ts_col="ts", n_buckets=4, merge_mode="mor",
+        ts_col="ts", n_buckets=4,
     )
     IncrementalRollup(
         base_t, str(tmp_path / "mv"), group_cols=["conv_id", "turn_idx"],

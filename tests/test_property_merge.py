@@ -8,7 +8,6 @@ from __future__ import annotations
 import datetime as dt
 import os
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -36,7 +35,6 @@ event_st = st.fixed_dictionaries(
 )
 
 
-@pytest.mark.parametrize("merge_mode", ["mor", "cow"])
 @settings(
     max_examples=8,
     deadline=None,
@@ -47,7 +45,7 @@ event_st = st.fixed_dictionaries(
     split=st.integers(0, 29),
 )
 def test_any_replay_matches_sequential_oracle(
-    spark, tmp_path_factory, merge_mode, rows, split
+    spark, tmp_path_factory, rows, split
 ):
     tmp = tmp_path_factory.mktemp("prop")
     os.makedirs(tmp / "src")
@@ -62,7 +60,6 @@ def test_any_replay_matches_sequential_oracle(
             fmt="jsonl",
             schema=CHANGE_EVENT_SCHEMA,
             n_buckets=2,
-            merge_mode=merge_mode,
         ),
     )
     if a:
