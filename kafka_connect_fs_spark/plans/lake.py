@@ -60,6 +60,7 @@ _TABLE_META = "_table.json"
 _OP_COL = "op"
 _BUCKET_COL = "_bucket"
 LINEAGE_COLS = ("_src_file", "_src_offset")
+_INTERNAL_COLS = (*LINEAGE_COLS, _BUCKET_COL, _OP_COL)
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -130,6 +131,15 @@ class Commit:
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)
+
+    def rows_per_bucket(self) -> dict[int, int]:
+        """Rows this commit wrote per bucket id, from its manifest entries
+        (salt-independent: a write salt splits a bucket's rows across
+        files WITHIN the bucket)."""
+        out: dict[int, int] = {}
+        for a in self.added:
+            out[a["bucket"]] = out.get(a["bucket"], 0) + int(a.get("rows", 0))
+        return out
 
     @staticmethod
     def from_json(s: str) -> "Commit":
@@ -391,6 +401,81 @@ class LakeTable:
             F.xxhash64(F.col(col)), F.lit(n or self.n_buckets)
         ).cast("int")
 
+    # -------------------------------------------------------- bucket layout
+    # The one place that knows how a key maps to a bucket under the scheme
+    # each file was written with, and what a manifest entry holds. Callers
+    # (MV refresh, the engine) ask these helpers instead of re-deriving it.
+    def _scheme_of(self, entry: dict) -> int:
+        """Bucket count a manifest entry's file was written under (entries
+        from before bucket-spec evolution carry none: the create-time
+        count)."""
+        return entry.get("scheme", self._base_n_buckets)
+
+    def _schemes(self, live: dict) -> set[int]:
+        return {self._scheme_of(a) for a in live.values()}
+
+    def _key_buckets(
+        self, keys: DataFrame, schemes, known: dict | None = None
+    ) -> dict[int, set[int]]:
+        """scheme -> the bucket ids the first-key values in ``keys`` hash
+        to under it. ``known`` supplies sets already derived for some
+        schemes (a bucket id is a pure function of key value and modulus,
+        so any table sharing the scheme can reuse them); the remaining
+        schemes cost ONE small aggregate (≤ n_buckets ints per scheme
+        reach the driver), none at all when ``known`` covers them."""
+        out = {s: set(known[s]) for s in schemes if known and s in known}
+        missing = sorted(set(schemes) - set(out))
+        if missing:
+            row = keys.agg(
+                *[
+                    F.collect_set(self._bucket_expr(self.keys[0], s)).alias(f"s{s}")
+                    for s in missing
+                ]
+            ).collect()[0]
+            out.update({s: set(row[f"s{s}"]) for s in missing})
+        return out
+
+    def _files_in_buckets(
+        self, live: dict, by_scheme: dict[int, set[int]]
+    ) -> list[str]:
+        """Live files whose bucket is in the set for their OWN scheme —
+        after set_n_buckets, equal bucket ids under different schemes are
+        different key partitions."""
+        return [
+            p
+            for p, a in live.items()
+            if a["bucket"] in by_scheme.get(self._scheme_of(a), ())
+        ]
+
+    def _changed_buckets(
+        self, commits: Sequence["Commit"], live: dict, changes: DataFrame
+    ) -> dict[int, set[int]]:
+        """scheme -> bucket ids the change rows of ``commits`` (read as
+        ``changes``) land in, under every scheme a ``live`` file carries.
+        Fast path: every live file and every commit share one scheme —
+        the union of the commits' manifest bucket ids, zero Spark jobs.
+        Mid bucket-spec migration the change keys are hashed under each
+        live scheme instead (one small aggregate)."""
+        added = [a for c in commits for a in c.added]
+        schemes = self._schemes(live) | {self._scheme_of(a) for a in added}
+        if len(schemes) == 1:
+            return {schemes.pop(): {a["bucket"] for a in added}}
+        return self._key_buckets(changes, self._schemes(live))
+
+    def _rows_in_key_buckets(
+        self, keys: DataFrame, known: dict | None = None
+    ) -> DataFrame:
+        """Resolved live rows of every bucket the first-key values in
+        ``keys`` hash to, reading ONLY those buckets' files (each under
+        its own scheme, like read_key). A superset of the keys' rows:
+        callers semi-join to ``keys`` themselves. ``known`` as for
+        _key_buckets."""
+        live, _, _ = self._state()
+        by_scheme = self._key_buckets(keys, self._schemes(live), known)
+        files = self._files_in_buckets(live, by_scheme)
+        df = self._read_files(files)
+        return self.read().limit(0) if df is None else self._live_rows(df)
+
     def _read_files(
         self, relpaths: Sequence[str], renames: dict | None = None
     ) -> DataFrame | None:
@@ -455,6 +540,38 @@ class LakeTable:
             return df  # never-written placeholder frame
         return lww_dedup(df, self.keys, self.ts_col)
 
+    def _live_rows(self, df: DataFrame) -> DataFrame:
+        """LWW-resolve, then drop the keys whose winning row is a
+        tombstone (internal columns kept)."""
+        df = self._resolve(df)
+        if _OP_COL in df.columns:
+            df = df.filter(F.col(_OP_COL) != F.lit("delete"))
+        return df
+
+    def _user_view(
+        self, df: DataFrame, columns: Sequence[str] | None = None
+    ) -> DataFrame:
+        """What a reader sees: live rows without lineage/bucket/op."""
+        df = self._live_rows(df).drop(*_INTERNAL_COLS)
+        return df.select(*columns) if columns is not None else df
+
+    def _pruned(
+        self, df: DataFrame, columns: Sequence[str] | None, caller: str
+    ) -> DataFrame:
+        """Project ``df`` to ``columns`` plus the internals the resolve
+        needs (keys, ts, lineage tie-break, op) — pruning applied BELOW the
+        resolve, which packs the whole row into a struct and so blocks
+        Catalyst's own column pruning (operators/lww.py)."""
+        if columns is None:
+            return df
+        missing = [c for c in columns if c not in df.columns]
+        if missing:
+            raise ValueError(f"{caller}(columns=...): not in table: {missing}")
+        # keep only internals the frame actually has: a never-written
+        # table's placeholder frame is keys-only (no ts/lineage)
+        need = dict.fromkeys([*columns, *self.keys, self.ts_col, *LINEAGE_COLS, _OP_COL])
+        return df.select(*[c for c in need if c in df.columns])
+
     def read(
         self, at_version: int | None = None, columns: Sequence[str] | None = None
     ) -> DataFrame:
@@ -469,27 +586,8 @@ class LakeTable:
         lineage tie-break are retained internally so LWW determinism is
         unchanged, then dropped unless requested). At 10^10-row scale the
         difference is reading one column family instead of the table."""
-        df = self.snapshot(at_version)
-        if columns is not None:
-            missing = [c for c in columns if c not in df.columns]
-            if missing:
-                raise ValueError(f"read(columns=...): not in table: {missing}")
-            # keep only internals the frame actually has: a never-written
-            # table's placeholder frame is keys-only (no ts/lineage)
-            need = [
-                c
-                for c in dict.fromkeys(
-                    [*columns, *self.keys, self.ts_col, *LINEAGE_COLS, _OP_COL]
-                )
-                if c in df.columns
-            ]
-            df = df.select(*need)
-        df = self._resolve(df)
-        if _OP_COL in df.columns:
-            df = df.filter(F.col(_OP_COL) != F.lit("delete"))
-        drop = [c for c in (*LINEAGE_COLS, _BUCKET_COL, _OP_COL) if c in df.columns]
-        df = df.drop(*drop)
-        return df.select(*columns) if columns is not None else df
+        df = self._pruned(self.snapshot(at_version), columns, "read")
+        return self._user_view(df, columns)
 
     def _key_int_width(self) -> int:
         """Byte width Spark's XxHash64 uses for the first key column: 4
@@ -533,23 +631,14 @@ class LakeTable:
                 return True
 
         live, _, _ = self._state()
-        files = [
-            p
-            for p, a in live.items()
-            if a["bucket"] == h % a.get("scheme", self._base_n_buckets)
-            and _covers(a)
-        ]
+        by_scheme = {s: {h % s} for s in self._schemes(live)}
+        files = [p for p in self._files_in_buckets(live, by_scheme) if _covers(live[p])]
         df = self._read_files(files)
         if df is None:
             return self.read().limit(0)
         # filter BEFORE the MoR resolve: the LWW shuffle then carries only
         # this key's rows, not the whole bucket
-        df = df.filter(F.col(self.keys[0]) == F.lit(key_value))
-        df = self._resolve(df)
-        if _OP_COL in df.columns:
-            df = df.filter(F.col(_OP_COL) != F.lit("delete"))
-        drop = [c for c in (*LINEAGE_COLS, _BUCKET_COL, _OP_COL) if c in df.columns]
-        return df.drop(*drop)
+        return self._user_view(df.filter(F.col(self.keys[0]) == F.lit(key_value)))
 
     def delete_where(
         self,
@@ -670,43 +759,19 @@ class LakeTable:
         ``columns`` prunes the scan below the LWW resolve exactly like
         ``read(columns=...)`` — an incremental export of two columns
         should not read twenty."""
-        files = self.files_in_range(ts_from, ts_to)
-        df = self._read_files(files)
+        df = self._read_files(self.files_in_range(ts_from, ts_to))
         if df is None:
             # empty window: still honor the projection contract (schema
             # stability for callers unioning per-window pages) and the
             # unknown-column validation
-            empty = self.read().limit(0)
-            if columns is not None:
-                missing = [c for c in columns if c not in empty.columns]
-                if missing:
-                    raise ValueError(
-                        f"read_range(columns=...): not in table: {missing}"
-                    )
-                empty = empty.select(*columns)
-            return empty
-        if columns is not None:
-            missing = [c for c in columns if c not in df.columns]
-            if missing:
-                raise ValueError(f"read_range(columns=...): not in table: {missing}")
-            need = [
-                c
-                for c in dict.fromkeys(
-                    [*columns, *self.keys, self.ts_col, *LINEAGE_COLS, _OP_COL]
-                )
-                if c in df.columns
-            ]
-            df = df.select(*need)
+            empty = self._pruned(self.read().limit(0), columns, "read_range")
+            return empty.select(*columns) if columns is not None else empty
+        df = self._pruned(df, columns, "read_range")
         if ts_from is not None:
             df = df.filter(F.col(self.ts_col) >= F.lit(ts_from))
         if ts_to is not None:
             df = df.filter(F.col(self.ts_col) < F.lit(ts_to))
-        df = self._resolve(df)
-        if _OP_COL in df.columns:
-            df = df.filter(F.col(_OP_COL) != F.lit("delete"))
-        drop = [c for c in (*LINEAGE_COLS, _BUCKET_COL, _OP_COL) if c in df.columns]
-        df = df.drop(*drop)
-        return df.select(*columns) if columns is not None else df
+        return self._user_view(df, columns)
 
     def read_changes(
         self, from_version: int, to_version: int | None = None
@@ -732,19 +797,7 @@ class LakeTable:
         rewritten buckets, not the commit's changes."""
         to_v = self.latest_version() if to_version is None else to_version
         parts = []
-        for name in self._list_commit_names():
-            v = int(name[:20])
-            if v <= from_version or v > to_v:
-                continue
-            c = self._load_commit(name)
-            if c.batch_id is None or not c.added:
-                continue  # maintenance commit: no new logical changes
-            if c.removed:
-                raise ValueError(
-                    f"read_changes: commit {c.version} (batch {c.batch_id!r}) "
-                    f"is a copy-on-write rewrite, which carries no change "
-                    f"set; read this table's state with read() instead"
-                )
+        for c in self._change_commits(from_version, to_v):
             df = self._read_files([a["path"] for a in c.added])
             parts.append(
                 df.withColumn(
@@ -775,6 +828,28 @@ class LakeTable:
             out = out.unionByName(p, allowMissingColumns=True)
         drop = [c for c in (_BUCKET_COL,) if c in out.columns]
         return out.drop(*drop)
+
+    def _change_commits(self, from_version: int, to_version: int) -> list[Commit]:
+        """The merge commits in (from_version, to_version] — the ones that
+        carry logical changes. Maintenance and metadata commits (batch_id
+        None or nothing added) are skipped. Versions are filtered by
+        FILENAME before any commit is parsed, so a cold tailer against a
+        10^5-commit log reads O(window) commit files, not O(log)."""
+        out = []
+        for name in self._list_commit_names():
+            if not from_version < int(name[:20]) <= to_version:
+                continue
+            c = self._load_commit(name)
+            if c.batch_id is None or not c.added:
+                continue
+            if c.removed:
+                raise ValueError(
+                    f"read_changes: commit {c.version} (batch {c.batch_id!r}) "
+                    f"is a copy-on-write rewrite, which carries no change "
+                    f"set; read this table's state with read() instead"
+                )
+            out.append(c)
+        return out
 
     def files_in_range(self, ts_from=None, ts_to=None) -> list[str]:
         """The live files read_range would open (exposed for tests/metrics)."""
@@ -847,38 +922,7 @@ class LakeTable:
         nb = self.n_buckets
         src = src.withColumn(_BUCKET_COL, self._bucket_expr(self.keys[0], nb))
         version = st.version + 1
-        # unique dir per ATTEMPT, not per version: two writers racing to the
-        # same version must never write into the same directory (the loser's
-        # mode('overwrite') would delete the winner's already-committed
-        # files before losing the log race); losers leave only orphan files
-        # that vacuum() removes
-        cdir_rel = f"c{version:020d}-{uuid.uuid4().hex[:8]}"
-        cdir = os.path.join(self.root, _DATA_DIR, cdir_rel)
-        if salt > 1:
-            # deterministic salt over (key, ts): a hot bucket's rows —
-            # including many versions of ONE hot key — spread over `salt`
-            # write tasks instead of serializing into one
-            slot = F.col(_BUCKET_COL) * F.lit(salt) + F.pmod(
-                F.xxhash64(*[F.col(k) for k in self.keys], F.col(self.ts_col)),
-                F.lit(salt),
-            )
-            n_slots = nb * salt
-        else:
-            slot = F.col(_BUCKET_COL)
-            n_slots = nb
-        (
-            # exact slot placement: hashing k bucket ids into k partitions
-            # leaves only ~0.63k non-empty tasks (r4 profiling: the 32-bucket
-            # write stage quantized to ~18 tasks, a 1.7× parallelism loss on
-            # the ingest hot stage); the rekey makes the exchange a
-            # permutation — one bucket(/salt) per task, zero empties
-            src.withColumn("_pb", F.col(_BUCKET_COL))
-            .repartition(n_slots, exact_slot_rekey(slot, n_slots))
-            .write.partitionBy("_pb")
-            .mode("overwrite")
-            .parquet(cdir)
-        )
-        added = self._scan_written(cdir, cdir_rel, nb)
+        added = self._write_bucketed(src, version, nb, salt=salt)
         # retry through commit races: a separate maintenance process
         # (compaction/expiry) landing a commit between this merge's state
         # read and its commit write is the NORMAL deployment, not an
@@ -968,6 +1012,53 @@ class LakeTable:
                 fields.append(f)
         fields.extend(f for f in new.fields if f.name in by_name)
         return T.StructType(fields).json()
+
+    def _write_bucketed(
+        self,
+        df: DataFrame,
+        version: int,
+        nb: int,
+        domain: Sequence[int] | None = None,
+        salt: int = 1,
+        sort: bool = False,
+    ) -> list[dict]:
+        """The one bucketed write: each ``_bucket`` (stamped under scheme
+        ``nb``) becomes its own ``_pb`` partition dir; returns the new
+        files' manifest entries.
+
+        Exact slot placement: hashing k bucket ids into k partitions
+        leaves only ~0.63k non-empty tasks (r4 profiling: a 1.7×
+        parallelism loss on the ingest hot stage); the rekey makes the
+        exchange a permutation — one bucket(/salt) per task. ``domain``
+        limits the slots to the buckets a rewrite touches; ``salt`` > 1
+        spreads each bucket over that many tasks by a deterministic hash
+        of (key, ts), so a hot bucket — even ONE hot key's versions — does
+        not serialize into one task. ``sort`` clusters by key within each
+        file, so footer key stats are tight (read_key skips siblings)."""
+        if domain is not None:
+            slot, n_slots = dense_slot(F.col(_BUCKET_COL), domain), len(domain)
+        elif salt > 1:
+            slot = F.col(_BUCKET_COL) * F.lit(salt) + F.pmod(
+                F.xxhash64(*[F.col(k) for k in self.keys], F.col(self.ts_col)),
+                F.lit(salt),
+            )
+            n_slots = nb * salt
+        else:
+            slot, n_slots = F.col(_BUCKET_COL), nb
+        # unique dir per ATTEMPT, not per version: two writers racing to the
+        # same version must never write into the same directory (the loser's
+        # mode('overwrite') would delete the winner's already-committed
+        # files before losing the log race); losers leave only orphan files
+        # that vacuum() removes
+        cdir_rel = f"c{version:020d}-{uuid.uuid4().hex[:8]}"
+        cdir = os.path.join(self.root, _DATA_DIR, cdir_rel)
+        out = df.withColumn("_pb", F.col(_BUCKET_COL)).repartition(
+            n_slots, exact_slot_rekey(slot, n_slots)
+        )
+        if sort:
+            out = out.sortWithinPartitions(*self.keys)
+        out.write.partitionBy("_pb").mode("overwrite").parquet(cdir)
+        return self._scan_written(cdir, cdir_rel, nb)
 
     def _scan_written(
         self, cdir: str, cdir_rel: str, scheme: int | None = None
@@ -1132,8 +1223,7 @@ class LakeTable:
         # under different schemes are different key partitions
         by_bucket: dict[tuple[int, int], list[str]] = {}
         for p, a in st.live.items():
-            s = a.get("scheme", self._base_n_buckets)
-            by_bucket.setdefault((s, a["bucket"]), []).append(p)
+            by_bucket.setdefault((self._scheme_of(a), a["bucket"]), []).append(p)
         targets = {
             sb: ps
             for sb, ps in by_bucket.items()
@@ -1156,60 +1246,33 @@ class LakeTable:
             if len(targets) > max_buckets:
                 worst = sorted(targets, key=lambda b: len(targets[b]), reverse=True)
                 targets = {b: targets[b] for b in worst[:max_buckets]}
-        migrating = any(s != nb for s, _ in targets)
         old_files = [p for ps in targets.values() for p in ps]
-        df = self._resolve(self._read_files(old_files))
-        if migrating:
-            # re-stamp under the current scheme (a no-op value-wise for
-            # rows already written under it)
-            df = df.withColumn(_BUCKET_COL, self._bucket_expr(self.keys[0], nb))
-            # re-stamped rows can land in ANY current-scheme bucket —
-            # exact placement over the full range (empty slots write
-            # nothing; transition-only cost)
-            slot_domain: list[int] = list(range(nb))
-        else:
-            slot_domain = sorted({b for _, b in targets})
-        version = st.version + 1
-        cdir_rel = f"c{version:020d}-{uuid.uuid4().hex[:8]}"  # unique per attempt
-        cdir = os.path.join(self.root, _DATA_DIR, cdir_rel)
-        n_slots = len(slot_domain)
-        (
-            # cluster by key within each rewritten bucket: the footer key
-            # stats become tight, so read_key skips sibling files, and
-            # parquet row-group stats prune inside the file (the Iceberg
-            # sort-order-on-rewrite pattern)
-            df.withColumn("_pb", F.col(_BUCKET_COL))
-            .repartition(
-                n_slots,
-                exact_slot_rekey(
-                    dense_slot(F.col(_BUCKET_COL), slot_domain), n_slots
-                ),
-            )
-            .sortWithinPartitions(*self.keys)
-            .write.partitionBy("_pb")
-            .mode("overwrite")
-            .parquet(cdir)
-        )
-        added = self._scan_written(cdir, cdir_rel, nb)
-        return self._commit_maintenance(
-            version, added, old_files,
-            metrics={
-                "compaction": True,
-                "files_removed": len(old_files),
-                "files_added": len(added),
-            },
+        # sorted by key within each bucket (the Iceberg sort-order-on-
+        # rewrite pattern)
+        return self._rewrite(
+            st, old_files, self._resolve(self._read_files(old_files)),
+            metrics={"compaction": True}, sort=True,
         )
 
-    def _commit_maintenance(
-        self, version: int, added: list, old_files: list[str], metrics: dict
+    def _rewrite(
+        self, st: _State, old_files: list[str], df: DataFrame, metrics: dict,
+        sort: bool = False,
     ) -> Commit | None:
-        """Commit a maintenance rewrite, retrying through commit races —
-        the normal case for a SEPARATE maintenance process running beside
-        a live ingest loop. The rewrite's parquet output is version-
-        independent; on ConcurrentCommitError re-read the head, verify
-        the rewritten inputs are all still live (a concurrent rewrite
-        replacing them makes this one stale: abandon it, vacuum collects
-        the orphan files), and re-attempt at the new head version.
+        """Write ``df`` — the resolved rows of ``old_files`` — bucketed
+        under the current scheme and commit it in their place
+        (maintenance commit, batch_id None). Files of an older scheme are
+        migrated on the way: every row is re-stamped under the current
+        scheme (a no-op value-wise for rows already under it) and placed
+        over the full bucket range, since re-stamped rows can land in ANY
+        current bucket; output files are single-scheme.
+
+        The commit retries through commit races — the normal case for a
+        SEPARATE maintenance process running beside a live ingest loop.
+        The parquet output is version-independent; on
+        ConcurrentCommitError re-read the head, verify the rewritten
+        inputs are all still live (a concurrent rewrite replacing them
+        makes this one stale: abandon it, vacuum collects the orphan
+        files), and re-attempt at the new head version.
 
         Safety under concurrency: an ingest commit only ADDS delta files,
         so replacing old_files with their resolved rewrite stays correct
@@ -1217,6 +1280,17 @@ class LakeTable:
         rewrite plus any concurrent deltas. (Tombstone expiry leans on
         its horizon contract: concurrent batches carry events newer than
         the expiry horizon by definition.)"""
+        nb = self.n_buckets
+        if any(self._scheme_of(st.live[p]) != nb for p in old_files):
+            df = df.withColumn(_BUCKET_COL, self._bucket_expr(self.keys[0], nb))
+            domain = list(range(nb))
+        else:
+            domain = sorted({st.live[p]["bucket"] for p in old_files})
+        version = st.version + 1
+        added = self._write_bucketed(df, version, nb, domain=domain, sort=sort)
+        metrics = {
+            **metrics, "files_removed": len(old_files), "files_added": len(added),
+        }
         for _attempt in range(4):
             commit = Commit(
                 version=version,
@@ -1252,91 +1326,26 @@ class LakeTable:
         snap = self.snapshot()
         if _OP_COL not in snap.columns:
             return None
-        expired = snap.filter(
-            (F.col(_OP_COL) == "delete") & (F.col(self.ts_col) < F.lit(older_than))
-        )
+        expired = (F.col(_OP_COL) == "delete") & (F.col(self.ts_col) < F.lit(older_than))
         # one snapshot drives files AND version (see compact)
         st = self._state_full()
-        nb = self.n_buckets
-        default = self._base_n_buckets
-        live_schemes = {a.get("scheme", default) for a in st.live.values()}
-        if len(live_schemes) > 1:
-            # bucket-spec transition: a tombstoned key's OTHER versions can
-            # live in files of another scheme whose bucket id (hash under
-            # that scheme) differs from the tombstone file's stored id —
-            # selecting by stored id alone would skip them, and dropping
-            # the tombstone would resurrect those losers at read time
-            # (e.g. a late upsert landing post-evolution in bucket h%13
-            # while the expired tombstone sits pre-evolution in h%8).
-            # Compute the expired keys' buckets under EVERY live scheme
-            # (one small distinct aggregate, ≤ n_buckets ints per scheme)
-            # and rewrite all of those files; the resolve below removes
-            # the losers in the same pass.
-            kc = self.keys[0]
-            row = (
-                expired.select(kc)
-                .distinct()
-                .agg(
-                    *[
-                        F.collect_set(
-                            F.pmod(F.xxhash64(F.col(kc)), F.lit(s)).cast("int")
-                        ).alias(f"s{s}")
-                        for s in sorted(live_schemes)
-                    ]
-                )
-                .collect()[0]
-            )
-            by_scheme = {s: set(row[f"s{s}"]) for s in live_schemes}
-            buckets = sorted(set().union(*by_scheme.values()))
-            if not buckets:
-                return None
-            old_files = [
-                p
-                for p, a in st.live.items()
-                if a["bucket"] in by_scheme[a.get("scheme", default)]
-            ]
-        else:
-            # single scheme: the stored bucket id IS hash % scheme
-            buckets = [
-                r[0] for r in expired.select(_BUCKET_COL).distinct().collect()
-            ]
-            if not buckets:
-                return None
-            old_files = [p for p, a in st.live.items() if a["bucket"] in buckets]
-        df = self._resolve(self._read_files(old_files)).filter(
-            ~((F.col(_OP_COL) == "delete") & (F.col(self.ts_col) < F.lit(older_than)))
-        )
-        mixed = {
-            st.live[p].get("scheme", self._base_n_buckets) for p in old_files
-        } != {nb}
-        if mixed:
-            # bucket-spec transition: rewritten output must be single-
-            # scheme per file — re-stamp to the current scheme (also
-            # migrates these files, same as compact)
-            df = df.withColumn(_BUCKET_COL, self._bucket_expr(self.keys[0], nb))
-            slot_domain: list[int] = list(range(nb))
-        else:
-            slot_domain = sorted(buckets)
-        version = st.version + 1
-        cdir_rel = f"c{version:020d}-{uuid.uuid4().hex[:8]}"  # unique per attempt
-        cdir = os.path.join(self.root, _DATA_DIR, cdir_rel)
-        n_slots = len(slot_domain)
-        (
-            df.withColumn("_pb", F.col(_BUCKET_COL))
-            .repartition(
-                n_slots,
-                exact_slot_rekey(
-                    dense_slot(F.col(_BUCKET_COL), slot_domain), n_slots
-                ),
-            )
-            .write.partitionBy("_pb")
-            .mode("overwrite")
-            .parquet(cdir)
-        )
-        added = self._scan_written(cdir, cdir_rel, nb)
-        return self._commit_maintenance(
-            version, added, old_files,
-            metrics={"tombstones_expired": True, "buckets": len(buckets)},
+        # select files by the expired keys' bucket under EVERY live scheme:
+        # across a bucket-spec transition a tombstoned key's OTHER versions
+        # can sit in files of another scheme (e.g. a late upsert landing
+        # post-evolution in bucket h%13 while the expired tombstone sits
+        # pre-evolution in h%8) — skipping them and dropping the tombstone
+        # would resurrect those losers at read time; the resolve below
+        # removes them in the same pass
+        by_scheme = self._key_buckets(snap.filter(expired), self._schemes(st.live))
+        old_files = self._files_in_buckets(st.live, by_scheme)
+        if not old_files:
+            return None
+        return self._rewrite(
+            st, old_files, self._resolve(self._read_files(old_files)).filter(~expired),
+            metrics={
+                "tombstones_expired": True,
+                "buckets": len(set().union(*by_scheme.values())),
+            },
         )
 
     # ---------------------------------------------------------------- utils

@@ -13,11 +13,12 @@ REPLACE prior row versions, so pure delta-addition would double-count;
 recomputing just the affected groups is correct under any mix of
 upserts, deletes and late data):
 
-1. The refresh window's commit manifests name the buckets the window's
-   delta files landed in — metadata only, no scan (when every live file
-   and every window commit share one bucket scheme; across a
-   ``set_n_buckets`` migration the touched buckets are instead computed
-   per live scheme with one tiny aggregate over the change feed).
+1. ``LakeTable`` names the buckets the refresh window's delta files
+   landed in, under the scheme each live file was written with — from
+   the window's manifests alone (no scan) when every file shares one
+   bucket scheme; across a ``set_n_buckets`` migration with one tiny
+   aggregate over the change feed. The bucket-scheme reasoning lives in
+   ``plans/lake.py``; this module only asks for files and rows.
 2. Only those buckets' live files are re-read (a group's rows co-locate
    in one bucket because grouping starts with the bucket key), LWW-
    resolved, semi-joined to the window's touched BUCKET KEYS, and
@@ -146,86 +147,6 @@ class IncrementalRollup:
         return self.table.read()
 
     # ---------------------------------------------------------- refresh
-    def _touched_buckets_by_scheme(
-        self, commits, live: dict, changes: DataFrame
-    ) -> dict[int, set[int]]:
-        """scheme -> touched bucket set. Fast path: every live file and
-        every window commit share one scheme — union the manifests'
-        bucket tags, zero Spark jobs. Slow path (mid bucket-spec
-        migration): hash the change feed's group keys under each live
-        scheme in ONE small aggregate (≤ n_buckets ints per scheme reach
-        the driver)."""
-        default = self.base._base_n_buckets
-        live_schemes = {a.get("scheme", default) for a in live.values()}
-        commit_schemes = {
-            a.get("scheme", default) for c in commits for a in c.added
-        }
-        if len(live_schemes | commit_schemes) == 1:
-            s = next(iter(live_schemes | commit_schemes))
-            return {s: {a["bucket"] for c in commits for a in c.added}}
-        g = self.group_cols[0]
-        sorted_schemes = sorted(live_schemes)
-        row = (
-            changes.select(g)
-            .distinct()
-            .agg(
-                *[
-                    F.collect_set(
-                        F.pmod(F.xxhash64(F.col(g)), F.lit(s)).cast("int")
-                    ).alias(f"s{s}")
-                    for s in sorted_schemes
-                ]
-            )
-            .collect()[0]
-        )
-        return {s: set(row[f"s{s}"]) for s in sorted_schemes}
-
-    def _read_prev_groups(
-        self, touched_keys: DataFrame, known: dict[int, set[int]] | None = None
-    ) -> DataFrame:
-        """The MV's previous groups for the touched bucket keys, reading
-        ONLY the MV files in buckets those keys hash to (per-file manifest
-        scheme, exactly like LakeTable.read_key) — gone-group detection
-        without a full-MV scan per refresh cycle.
-
-        ``known`` carries the BASE refresh window's scheme→touched-bucket
-        sets: a bucket id is a pure function of (key value, modulus), so
-        any MV scheme equal to a base scheme reuses the base's
-        manifest-derived set with zero Spark jobs (the common case — MV
-        and base share a bucket count). Only schemes not covered run one
-        tiny aggregate (≤ n_buckets ints per scheme to the driver)."""
-        mv = self.table
-        live, _, renames = mv._state()
-        if not live:
-            return mv.read().select(*self.group_cols).limit(0)
-        bk = self.group_cols[0]
-        default = mv._base_n_buckets
-        schemes = sorted({a.get("scheme", default) for a in live.values()})
-        by_scheme = {s: set(known[s]) for s in schemes if known and s in known}
-        missing = [s for s in schemes if s not in by_scheme]
-        if missing:
-            row = touched_keys.agg(
-                *[
-                    F.collect_set(
-                        F.pmod(F.xxhash64(F.col(bk)), F.lit(s)).cast("int")
-                    ).alias(f"s{s}")
-                    for s in missing
-                ]
-            ).collect()[0]
-            by_scheme.update({s: set(row[f"s{s}"]) for s in missing})
-        files = [
-            p
-            for p, a in live.items()
-            if a["bucket"] in by_scheme[a.get("scheme", default)]
-        ]
-        df = mv._read_files(files, renames=renames)
-        if df is None:
-            return mv.read().select(*self.group_cols).limit(0)
-        df = mv._resolve(df)
-        if "op" in df.columns:
-            df = df.filter(F.col("op") != F.lit("delete"))
-        return df.select(*self.group_cols)
-
     def refresh(self, to_version: int | None = None) -> RefreshStats:
         """Bring the MV up to ``to_version`` (default: the base head).
 
@@ -255,31 +176,15 @@ class IncrementalRollup:
                 candidates = list(live)
                 touched_keys = None
             else:
-                # filter by the version encoded in the FILENAME before parsing
-                # anything — a cold tailer against a 10^5-commit log must read
-                # O(window) commit files, not O(log)
-                window = [
-                    c
-                    for c in (
-                        base._load_commit(n)
-                        for n in base._list_commit_names()
-                        if last < int(n[:20]) <= head
-                    )
-                    if c.batch_id is not None and c.added
-                ]
+                window = base._change_commits(last, head)
                 if not window:
                     # only maintenance / metadata commits in the window: no
                     # logical changes, nothing to absorb (the MV stays pinned
                     # at `last`; read_changes would skip these anyway)
                     return RefreshStats(last, last, 0, 0, 0, len(live), True)
                 changes = base.read_changes(last, head)
-                by_scheme = self._touched_buckets_by_scheme(window, live, changes)
-                default = base._base_n_buckets
-                candidates = [
-                    p
-                    for p, a in live.items()
-                    if a["bucket"] in by_scheme.get(a.get("scheme", default), ())
-                ]
+                by_scheme = base._changed_buckets(window, live, changes)
+                candidates = base._files_in_buckets(live, by_scheme)
                 # touched BUCKET KEYS, not touched group values: change rows
                 # carry only their NEW column values (and delete tombstones
                 # carry keys alone), so deriving groups from the change feed
@@ -299,9 +204,7 @@ class IncrementalRollup:
             if snap is None:
                 recomputed = None
             else:
-                snap = base._resolve(snap)
-                if "op" in snap.columns:
-                    snap = snap.filter(F.col("op") != F.lit("delete"))
+                snap = base._live_rows(snap)
                 if touched_keys is not None:
                     snap = snap.join(
                         touched_keys, on=[self.group_cols[0]], how="left_semi"
@@ -342,10 +245,14 @@ class IncrementalRollup:
                     }
                 # the MV shares the base's bucket key (group_cols[0]), so the
                 # touched keys map straight to MV buckets: read only those MV
-                # files (per-file manifest scheme, exactly like read_key) —
-                # at 10^8 groups this turns a full-MV scan per refresh into
-                # O(touched buckets' files)
-                prev = self._read_prev_groups(touched_keys, known=by_scheme)
+                # files — at 10^8 groups this turns a full-MV scan per
+                # refresh into O(touched buckets' files). An MV scheme equal
+                # to a base scheme reuses the base window's bucket set with
+                # zero Spark jobs (the common case: MV and base share a
+                # bucket count)
+                prev = self.table._rows_in_key_buckets(
+                    touched_keys, known=by_scheme
+                ).select(*self.group_cols)
                 gone = prev.join(
                     touched_keys,
                     on=prev[self.group_cols[0]].eqNullSafe(

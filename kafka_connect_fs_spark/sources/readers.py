@@ -921,6 +921,25 @@ def avro_available(spark: SparkSession) -> bool:
     return _AVRO_AVAILABLE
 
 
+_AVRO_WIDENINGS = {(T.IntegerType, T.LongType), (T.FloatType, T.DoubleType)}
+
+
+def _avro_fits(writer: T.DataType, read: T.DataType) -> bool:
+    """Whether the typed Arrow path can emit values of a file's writer
+    type as the read type: equal types, int→long and float→double
+    widening, writer fields the read schema lacks (dropped) and read
+    fields the writer lacks (null-filled), recursively through structs,
+    arrays and maps."""
+    if isinstance(read, T.StructType) and isinstance(writer, T.StructType):
+        w = {f.name: f.dataType for f in writer.fields}
+        return all(_avro_fits(w[f.name], f.dataType) for f in read.fields if f.name in w)
+    if isinstance(read, T.ArrayType) and isinstance(writer, T.ArrayType):
+        return _avro_fits(writer.elementType, read.elementType)
+    if isinstance(read, T.MapType) and isinstance(writer, T.MapType):
+        return _avro_fits(writer.valueType, read.valueType)
+    return writer == read or (type(writer), type(read)) in _AVRO_WIDENINGS
+
+
 def read_avro_python(
     spark: SparkSession,
     items: list[WorkItem],
@@ -942,7 +961,11 @@ def read_avro_python(
 
     Failure policy: a CORRUPT container (bad magic, torn block, codec
     error) is a data problem — skipped with a warning so one poison file
-    cannot stall the pipeline. A SCHEMA-RESOLUTION error (illegal
+    cannot stall the pipeline. So is schema DRIFT without a reader schema:
+    the read schema comes from the first file's writer schema, and a
+    later file whose writer schema changes a field's type in a way the
+    typed path cannot emit (``x: long`` → ``x: string``) is skipped with
+    a warning, checked once per file. A SCHEMA-RESOLUTION error (illegal
     narrowing, missing default) is a configuration problem — it fails
     the read loudly, like GenericDatumReader, so a wrong reader schema
     is fixed instead of silently dropping files."""
@@ -1018,6 +1041,23 @@ def read_avro_python(
             # writer schema (mixed-generation directories resolve
             # file-by-file, like the reference's reader)
             records = resolve_records(records, writer_schema, reader_schema)
+        elif not declared_cast:
+            # typed path: one check of THIS file's writer schema, not a
+            # per-value guard — a drifted file would otherwise fail the
+            # Arrow conversion and with it the whole read
+            try:
+                fits = _avro_fits(avro_to_spark_schema(writer_schema), schema)
+            except ValueError:  # writer schema with no Spark typing
+                fits = False
+            if not fits:
+                import sys
+
+                print(
+                    f"kcfs: skipping avro container {src}: its writer schema "
+                    f"does not convert to the read schema {schema.simpleString()}",
+                    file=sys.stderr,
+                )
+                return None
         return records
 
     if not declared_cast:

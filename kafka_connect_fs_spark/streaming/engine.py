@@ -204,11 +204,9 @@ class IngestEngine:
         )
         # an EXISTING table's frozen spec wins over the config — but a
         # silently-drifted config would still drive the quarantine filter
-        # and planning, so mismatches are an error, not a shrug. Replay
-        # the log first: n_buckets may have EVOLVED via set_n_buckets —
-        # the config must match the table's CURRENT scheme, not the
-        # create-time one
-        self.lake._state_full()
+        # and planning, so mismatches are an error, not a shrug. n_buckets
+        # is the table's CURRENT scheme (opening the table replays the log,
+        # so a set_n_buckets evolution is already applied)
         drift = {
             name: (got, want)
             for name, got, want in (
@@ -639,9 +637,9 @@ class IngestEngine:
             # consumed offsets, the per-range failure flags, AND the record
             # count (no separate count() job on the fast path)
             fmts = {self._fmt_of(w.path) for w in work}
-            line_stats = []
-            if lines_df is not None:
-                line_stats = (
+
+            def _offset_stats() -> list:
+                return (
                     lines_df.groupBy("_src_file")
                     .agg(
                         F.max("_src_end").alias("end"),
@@ -656,6 +654,8 @@ class IngestEngine:
                     )
                     .collect()
                 )
+
+            line_stats = _offset_stats() if lines_df is not None else []
             # fast count only where 1 raw line == 1 record and no transform
             # drops rows (csv/tsv headers and custom transforms change the
             # record count)
@@ -777,23 +777,14 @@ class IngestEngine:
                 # commit and the batch replays cleanly.
                 if lines_df is None:
                     return
-                again = {
-                    r["_src_file"]: (r["end"], r["cnt"], r["n_failed_ranges"])
-                    for r in lines_df.groupBy("_src_file")
-                    .agg(
-                        F.max("_src_end").alias("end"),
-                        F.count(F.when(F.col("_line_no") >= 0, 1)).alias("cnt"),
-                        F.count(
-                            F.when(F.col("_line_no") == LINE_NO_RANGE_FAILED, 1)
-                        ).alias("n_failed_ranges"),
-                    )
-                    .collect()
-                }
-                before = {
-                    r["_src_file"]: (r["end"], r["cnt"], r["n_failed_ranges"])
-                    for r in line_stats
-                }
-                if again != before:
+
+                def by_file(rows) -> dict:
+                    return {
+                        r["_src_file"]: (r["end"], r["cnt"], r["n_failed_ranges"])
+                        for r in rows
+                    }
+
+                if by_file(_offset_stats()) != by_file(line_stats):
                     raise RuntimeError(
                         "scan results changed between offset stats and the "
                         "merge write (cached partitions recomputed over "
@@ -810,8 +801,9 @@ class IngestEngine:
                 ),
                 precommit_check=_stats_still_hold,
             )
+            rows_per_bucket = commit.rows_per_bucket()
             if cfg.write_salt == "auto":
-                self._update_auto_salt(commit)
+                self._update_auto_salt(rows_per_bucket)
             if obs is not None:
                 # the merge's write action has run, so the metric is ready
                 # (no blocking wait, no extra job)
@@ -846,7 +838,10 @@ class IngestEngine:
             commit.metrics.get("rows_written", 0), cleaned=cleaned,
             duration_s=time.monotonic() - t0, schema_diff=schema_diff,
         )
-        self._log_metrics(res, commit.metrics, added=commit.added, version=commit.version)
+        self._log_metrics(
+            res, commit.metrics, rows_per_bucket=rows_per_bucket,
+            version=commit.version,
+        )
         return res
 
     def run(self, policy, stop_on_error: bool = False) -> list[BatchResult]:
@@ -874,22 +869,18 @@ class IngestEngine:
         return results
 
     # ---------------------------------------------------------- auto salt
-    def _update_auto_salt(self, commit) -> None:
+    def _update_auto_salt(self, rows_per_bucket: dict[int, int]) -> None:
         """Feedback controller for the hot-conv_id write salt
         (write_salt="auto"): size the NEXT batch's salt from the
-        per-bucket row counts this commit's manifest already carries —
-        zero extra Spark jobs. Per-bucket rows are salt-independent (the
-        salt splits a bucket's rows across files WITHIN the bucket), so
-        the measurement is unbiased whatever salt this batch used. Rise
+        per-bucket row counts this commit's manifest already carries
+        (``Commit.rows_per_bucket``) — zero extra Spark jobs. Per-bucket
+        rows are salt-independent, so the measurement is unbiased
+        whatever salt this batch used. Rise
         is immediate (the hot bucket would otherwise serialize its write
         into one task next batch too); decay is one step per calm batch
         (a transient spike shouldn't keep fragmenting files that
         compaction then has to fold)."""
-        by_bucket: dict[int, int] = {}
-        for a in commit.added:
-            b = a.get("bucket")
-            by_bucket[b] = by_bucket.get(b, 0) + int(a.get("rows", 0))
-        hot = max(by_bucket.values(), default=0)
+        hot = max(rows_per_bucket.values(), default=0)
         target = max(1, int(self.config.target_rows_per_write_task))
         desired = min(int(self.config.max_write_salt), -(-hot // target))
         self._auto_salt = (
@@ -971,7 +962,8 @@ class IngestEngine:
 
     # -------------------------------------------------------------- metrics
     def _log_metrics(
-        self, res: BatchResult, merge_metrics: dict, added=None, version=None
+        self, res: BatchResult, merge_metrics: dict, rows_per_bucket=None,
+        version=None,
     ) -> None:
         rec = {
             "batch_id": res.batch_id,
@@ -987,11 +979,10 @@ class IngestEngine:
         }
         if res.schema_diff:
             rec["schema_diff"] = res.schema_diff
-        if added:
-            per_bucket: dict[int, int] = {}
-            for a in added:
-                per_bucket[a["bucket"]] = per_bucket.get(a["bucket"], 0) + a["rows"]
-            rec["rows_per_bucket"] = {str(k): v for k, v in sorted(per_bucket.items())}
+        if rows_per_bucket:
+            rec["rows_per_bucket"] = {
+                str(k): v for k, v in sorted(rows_per_bucket.items())
+            }
         with open(self._metrics_path, "a") as f:
             f.write(json.dumps(rec) + "\n")
 

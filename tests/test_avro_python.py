@@ -102,6 +102,34 @@ def test_reader_schema_projection(spark, tmp_path):
     assert rows[0].conv_id == "c0" and rows[0].added_later is None
 
 
+def test_writer_schema_drift_skips_the_file_not_the_batch(spark, tmp_path):
+    """No reader schema: the read schema comes from the first file, so a
+    later file whose writer schema changed a field's type (long → string)
+    cannot be emitted typed. It is skipped with a warning, like a corrupt
+    container — the first file's rows still come through. Compatible
+    drift (int → long widening, an added field) still reads."""
+    def schema(fields):
+        return {"type": "record", "name": "R", "fields": fields}
+
+    items = []
+    for name, fields, rows in [
+        ("a", [{"name": "k", "type": "string"}, {"name": "x", "type": "long"}],
+         [{"k": "a0", "x": 1}, {"k": "a1", "x": 2}]),
+        ("b", [{"name": "k", "type": "string"}, {"name": "x", "type": "string"}],
+         [{"k": "b0", "x": "oops"}]),
+        ("c", [{"name": "k", "type": "string"}, {"name": "x", "type": "int"},
+               {"name": "extra", "type": "double"}],
+         [{"k": "c0", "x": 7, "extra": 0.5}]),
+    ]:
+        p = str(tmp_path / f"{name}.avro")
+        write_container(p, schema(fields), rows)
+        items.append(WorkItem(p, 0, os.path.getsize(p)))
+    df = read_avro_python(spark, items)
+    got = {r.k: r.x for r in df.collect()}
+    assert got == {"a0": 1, "a1": 2, "c0": 7}
+    assert dict(df.dtypes)["x"] == "bigint"
+
+
 def test_engine_ingests_avro_files_end_to_end(spark, tmp_path):
     """Rotate-based avro ingest through the engine (agnostic dispatch by
     .avro extension), exactly-once across triggers."""

@@ -632,7 +632,10 @@ def test_hot_key_skew_ingest_is_exact(spark, tmp_path):
 def test_auto_salt_controller_rise_cap_decay(spark, tmp_path):
     """write_salt='auto' feedback law: salt = ceil(hottest bucket rows /
     target), rise immediate, capped at max_write_salt, decay one step per
-    calm batch, floor 1. Pure-controller test over stub commits."""
+    calm batch, floor 1. Pure-controller test over stub per-bucket row
+    tallies (``Commit.rows_per_bucket``)."""
+    from kafka_connect_fs_spark.plans.lake import Commit
+
     engine = make_engine(
         spark,
         tmp_path,
@@ -641,23 +644,26 @@ def test_auto_salt_controller_rise_cap_decay(spark, tmp_path):
         max_write_salt=4,
     )
 
-    class _C:
-        def __init__(self, added):
-            self.added = added
+    def tally(added):
+        return Commit(0, None, added, [], None).rows_per_bucket()
 
     assert engine._auto_salt == 1
-    # hot bucket: ceil(350/100) = 4 — immediate rise
-    engine._update_auto_salt(_C([{"bucket": 0, "rows": 350}, {"bucket": 1, "rows": 10}]))
+    # hot bucket: ceil(350/100) = 4 — immediate rise; a salted bucket's
+    # files add up (200 + 150)
+    engine._update_auto_salt(tally([
+        {"bucket": 0, "rows": 200}, {"bucket": 0, "rows": 150},
+        {"bucket": 1, "rows": 10},
+    ]))
     assert engine._auto_salt == 4
     # hotter still: capped at max_write_salt
-    engine._update_auto_salt(_C([{"bucket": 2, "rows": 10_000}]))
+    engine._update_auto_salt(tally([{"bucket": 2, "rows": 10_000}]))
     assert engine._auto_salt == 4
     # calm batches decay one step each, never below 1
     for expected in (3, 2, 1, 1):
-        engine._update_auto_salt(_C([{"bucket": 0, "rows": 10}]))
+        engine._update_auto_salt(tally([{"bucket": 0, "rows": 10}]))
         assert engine._auto_salt == expected
     # empty commit (no files added) also counts as calm, floors at 1
-    engine._update_auto_salt(_C([]))
+    engine._update_auto_salt(tally([]))
     assert engine._auto_salt == 1
 
 

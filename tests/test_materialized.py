@@ -419,7 +419,7 @@ def test_gone_group_read_is_bucket_pruned(spark, base, tmp_path):
     mv = mv_of(base, tmp_path)
     mv.refresh()
     touched = spark.createDataFrame([("c3",)], "conv_id string")
-    prev = mv._read_prev_groups(touched)
+    prev = mv.table._rows_in_key_buckets(touched).select(*mv.group_cols)
     opened = set(prev.inputFiles())
     live, _, _ = mv.table._state()
     assert 0 < len(opened) < len(live), (len(opened), len(live))
